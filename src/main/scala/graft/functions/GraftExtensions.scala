@@ -329,6 +329,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         KmvSketch(children.head, intArg(children(1), "k"))
       }))
     ext.injectFunction((
+      FunctionIdentifier("adc_scan"),
+      info("adc_scan",
+        "adc_scan(codes, lut[, cell, coarse]) - per lookup table, the sum " +
+          "of the entries a packed BINARY(M) PQ code selects from a " +
+          "foldable [T][M][K] table; with an IVF cell slot and a " +
+          "foldable [C][T] coarse table, plus the cell's coarse term " +
+          "(NULL where a table does not probe the cell)"),
+      (children: Seq[Expression]) => children match {
+        case Seq(codes, lut) => AdcScan(codes, lut)
+        case Seq(codes, lut, cell, coarse) =>
+          AdcScanCoarse(codes, lut, cell, coarse)
+        case _ => throw new IllegalArgumentException(
+          "adc_scan(codes, lut[, cell, coarse]) takes 2 or 4 arguments, " +
+            s"got ${children.size}")
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("pq_decode"),
+      info("pq_decode",
+        "pq_decode(codes, book) - the PQ reconstruction a packed " +
+          "BINARY(M) code selects from a foldable [M][K][w] codebook"),
+      (children: Seq[Expression]) => {
+        expectArity("pq_decode(codes, book)", 2, children)
+        PqDecode(children(0), children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("top_c"),
+      info("top_c",
+        "top_c(score, id, payload, c) - the c best (score DESC, id ASC) " +
+          "entries as array<struct<id, score, payload>>, best first; " +
+          "bounded per-group state, partial-aggregated map-side"),
+      (children: Seq[Expression]) => {
+        expectArity("top_c(score, id, payload, c)", 4, children)
+        TopC(children(0), children(1), children(2), intArg(children(3), "c"))
+      }))
+    ext.injectFunction((
       FunctionIdentifier("sign_pack32"),
       info("sign_pack32",
         "sign_pack32(v, offset) - 32 sign bits of v[offset..offset+31] " +

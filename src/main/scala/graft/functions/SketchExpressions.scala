@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
@@ -210,4 +210,150 @@ case class KmvSketch(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvSketch =
     copy(child = newChildren.head)
+}
+
+/** Bounded top-C per group: `top_c(score, id, payload, c)` keeps the
+  * c best (score DESC, id ASC) entries — the ranking a `row_number()`
+  * window over that order cut at c would emit — as an array of
+  * struct(id, score, payload), best first. Scores order as Spark
+  * orders doubles (NaN above every number, -0.0 = 0.0); rows with a
+  * NULL score or id are skipped. The payload (any type) rides with its
+  * entry, so a consumer of the survivors needs no join back to the
+  * scanned rows.
+  *
+  * State is a heap of at most c entries whose head is the worst kept,
+  * so update and merge are O(log c) per entry and the result is the
+  * top c of the whole multiset whatever the merge order or
+  * partitioning; a payload is copied only when its entry is admitted.
+  * Spark runs it as a partial aggregate per map task ([[KmvKth]]'s
+  * ObjectHashAggregate path): the exchange carries at most
+  * partitions × groups × c entries, never the scored rows. */
+case class TopC(
+    score: Expression,
+    id: Expression,
+    payload: Expression,
+    c: Int,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[java.util.PriorityQueue[TopC.Entry]] {
+
+  import TopC.Entry
+
+  require(c >= 1 && c <= 1000000, s"top_c bound out of range: $c")
+
+  override def children: Seq[Expression] = Seq(score, id, payload)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (score.dataType == DoubleType && id.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"top_c expects (DOUBLE score, BIGINT id), got " +
+        s"${score.dataType.catalogString} and ${id.dataType.catalogString}")
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("payload", payload.dataType, payload.nullable))),
+    containsNull = false)
+  override def prettyName: String = "top_c"
+
+  /** payload value → a standalone one-field UnsafeRow (serializable) */
+  @transient private lazy val pack = UnsafeProjection.create(
+    Array[Expression](BoundReference(0, payload.dataType, payload.nullable)))
+
+  override def createAggregationBuffer(): java.util.PriorityQueue[Entry] =
+    new java.util.PriorityQueue[Entry](TopC.WorstFirst)
+
+  private def admits(buf: java.util.PriorityQueue[Entry], s: Double,
+      i: Long): Boolean =
+    buf.size < c || TopC.better(s, i, buf.peek())
+
+  private def add(buf: java.util.PriorityQueue[Entry], e: Entry): Unit = {
+    if (buf.size >= c) buf.poll()
+    buf.add(e)
+  }
+
+  override def update(
+      buffer: java.util.PriorityQueue[Entry],
+      input: InternalRow): java.util.PriorityQueue[Entry] = {
+    val s = score.eval(input)
+    val i = id.eval(input)
+    if (s != null && i != null) {
+      val (sd, il) = (s.asInstanceOf[Double], i.asInstanceOf[Long])
+      if (admits(buffer, sd, il))
+        add(buffer, Entry(sd, il, pack(InternalRow(payload.eval(input))).copy()))
+    }
+    buffer
+  }
+
+  override def merge(
+      buffer: java.util.PriorityQueue[Entry],
+      other: java.util.PriorityQueue[Entry])
+      : java.util.PriorityQueue[Entry] = {
+    val it = other.iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (admits(buffer, e.score, e.id)) add(buffer, e)
+    }
+    buffer
+  }
+
+  override def eval(buffer: java.util.PriorityQueue[Entry]): Any = {
+    val kept = buffer.toArray(new Array[Entry](0))
+    java.util.Arrays.sort(kept, TopC.WorstFirst.reversed())
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(kept.map(e =>
+      InternalRow(e.id, e.score, e.row.get(0, payload.dataType))))
+  }
+
+  override def serialize(buffer: java.util.PriorityQueue[Entry]): Array[Byte] = {
+    val rows = buffer.toArray(new Array[Entry](0))
+    val bb = ByteBuffer.allocate(4 + rows.map(20 + _.row.getSizeInBytes).sum)
+    bb.putInt(rows.length)
+    rows.foreach { e =>
+      bb.putDouble(e.score).putLong(e.id)
+        .putInt(e.row.getSizeInBytes).put(e.row.getBytes)
+    }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[Entry] = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val q = createAggregationBuffer()
+    var i = 0
+    while (i < n) {
+      val (s, id, len) = (bb.getDouble, bb.getLong, bb.getInt)
+      val b = new Array[Byte](len)
+      bb.get(b)
+      val row = new UnsafeRow(1)
+      row.pointTo(b, len)
+      q.add(Entry(s, id, row))
+      i += 1
+    }
+    q
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): TopC =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): TopC =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): TopC =
+    copy(score = newChildren(0), id = newChildren(1), payload = newChildren(2))
+}
+
+object TopC {
+  /** `row`: the packed payload */
+  final case class Entry(score: Double, id: Long, row: UnsafeRow)
+
+  /** (score, id) ranks strictly above `e`: higher score, then smaller id */
+  def better(score: Double, id: Long, e: Entry): Boolean = {
+    val s = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+      .compareDoubles(score, e.score)
+    s > 0 || (s == 0 && id < e.id)
+  }
+
+  /** Ascending in rank quality: lower score first, then larger id. */
+  val WorstFirst: java.util.Comparator[Entry] = (a: Entry, b: Entry) =>
+    if (better(b.score, b.id, a)) -1 else if (better(a.score, a.id, b)) 1
+    else 0
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType}
 
 private[functions] object VectorInput {
   def isVector(dt: DataType): Boolean = dt match {
@@ -421,5 +422,228 @@ case class NearestCentroid(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Foldable lookup-table literals of the compressed-domain ADC kernels
+  * ([[AdcScan]], [[AdcScanCoarse]], [[PqDecode]]), decoded once per
+  * expression instance. A packed PQ code is BINARY(M): byte j is the
+  * vector's dense slot within subspace j's codebook. */
+private[functions] object Adc {
+
+  /** `array<array<array<double>>>` [T][M][K_j] → nested primitive arrays.
+    * Each subspace row holds exactly its live slots, so a slot a Lloyd
+    * pass dropped is simply out of range. */
+  def tables(e: Expression): Array[Array[Array[Double]]] = {
+    val ts = e.eval(null).asInstanceOf[ArrayData]
+    Array.tabulate(ts.numElements()) { t =>
+      val ms = ts.getArray(t)
+      Array.tabulate(ms.numElements())(j => ms.getArray(j).toDoubleArray())
+    }
+  }
+
+  def isTables(dt: DataType): Boolean = dt match {
+    case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
+    case _ => false
+  }
+
+  /** The code's slot in subspace j, refusing a code that does not fit
+    * the table: a wrong code width or a slot past the subspace's live
+    * entries means a corrupt or foreign store — never a silent read. */
+  def slot(codes: Array[Byte], j: Int, live: Int): Int = {
+    val s = codes(j) & 0xff
+    if (s >= live) throw new IllegalStateException(
+      s"ADC code points at absent slot $s of subspace $j (which holds " +
+        s"$live) — corrupt PQ store")
+    s
+  }
+
+  def requireWidth(codes: Array[Byte], m: Int): Unit =
+    if (codes.length != m) throw new IllegalStateException(
+      s"${codes.length}-byte PQ code against an M=$m lookup table — " +
+        "corrupt or foreign PQ store")
+
+  /** out(t) = Σ_j tables(t)(j)(codes(j)), summed in subspace order. */
+  def scan(codes: Array[Byte], tabs: Array[Array[Array[Double]]]): Array[Double] = {
+    val out = new Array[Double](tabs.length)
+    var t = 0
+    while (t < tabs.length) {
+      val tab = tabs(t)
+      requireWidth(codes, tab.length)
+      var s = 0.0
+      var j = 0
+      while (j < tab.length) { s += tab(j)(slot(codes, j, tab(j).length)); j += 1 }
+      out(t) = s
+      t += 1
+    }
+    out
+  }
+}
+
+/** Compressed-domain ADC scan (Jégou et al. 2011's asymmetric distance
+  * computation): `adc_scan(codes, lut)` sums, for each of the T tables
+  * of a foldable [T][M][K_j] lookup table, the entry each of the
+  * vector's M code bytes selects. With one table per query holding
+  * that query's partial dots against every subspace centroid, each sum
+  * is the query's inner product with the vector's reconstruction; a
+  * table of squared centroid norms yields the reconstruction's squared
+  * norm in the same pass.
+  *
+  * One primitive loop over the packed row: no corpus row is multiplied
+  * or shuffled. The table is a plan literal, shipped once per stage
+  * with the task binary; its size is T·M·K doubles, independent of the
+  * corpus. A code byte past its subspace's live slots, or a code of
+  * the wrong width, throws. */
+case class AdcScan(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == BinaryType && Adc.isTables(right.dataType) &&
+        right.foldable) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (binary codes, foldable " +
+        "array<array<array<double>>> lookup table), got " +
+        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def prettyName: String = "adc_scan"
+
+  @transient private lazy val tabs = Adc.tables(right)
+
+  def compute(codes: Array[Byte]): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Adc.scan(codes, tabs))
+
+  override protected def nullSafeEval(c: Any, t: Any): Any =
+    compute(c.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("adcScan", this)
+    nullSafeCodeGen(ctx, ev, (c, _) => s"${ev.value} = $ref.compute($c);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): AdcScan =
+    copy(left = newLeft, right = newRight)
+}
+
+/** IVF-PQ form of [[AdcScan]]: `adc_scan(codes, lut, cell, coarse)`
+  * adds the coarse term of the vector's IVF cell. `cell` is the cell's
+  * dense slot and `coarse` a foldable [C][T] table of per-table coarse
+  * terms (the query-to-cell dots); a NULL entry means table t does not
+  * probe that cell, and the result's element t is then NULL, so the
+  * caller drops the pair without scoring it further. A cell slot
+  * outside the table throws: the store indexes a cell the serving
+  * codebook does not have. */
+case class AdcScanCoarse(codes: Expression, lut: Expression,
+    cell: Expression, coarse: Expression) extends QuaternaryExpression {
+
+  override def first: Expression = codes
+  override def second: Expression = lut
+  override def third: Expression = cell
+  override def fourth: Expression = coarse
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = codes.dataType == BinaryType && Adc.isTables(lut.dataType) &&
+      lut.foldable && cell.dataType == IntegerType && coarse.foldable &&
+      (coarse.dataType match {
+        case ArrayType(ArrayType(DoubleType, _), _) => true
+        case _ => false
+      })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (binary codes, foldable lookup table, int " +
+        "cell slot, foldable array<array<double>> coarse table), got " +
+        children.map(_.dataType.catalogString).mkString(", "))
+  }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  override def prettyName: String = "adc_scan"
+
+  @transient private lazy val tabs = Adc.tables(lut)
+
+  /** coarse(c)(t); null = table t does not probe cell c */
+  @transient private lazy val terms: Array[Array[java.lang.Double]] = {
+    val cs = coarse.eval(null).asInstanceOf[ArrayData]
+    Array.tabulate(cs.numElements()) { c =>
+      val vs = cs.getArray(c)
+      Array.tabulate(vs.numElements())(t =>
+        if (vs.isNullAt(t)) null else java.lang.Double.valueOf(vs.getDouble(t)))
+    }
+  }
+
+  def compute(c: Array[Byte], slot: Int): ArrayData = {
+    if (slot < 0 || slot >= terms.length) throw new IllegalStateException(
+      s"IVF cell slot $slot is absent from the ${terms.length}-cell " +
+        "coarse table — corrupt IVF-PQ store")
+    val sums = Adc.scan(c, tabs)
+    val ct = terms(slot)
+    val out = new Array[Any](sums.length)
+    var t = 0
+    while (t < sums.length) {
+      if (ct(t) != null) out(t) = ct(t).doubleValue + sums(t)
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def nullSafeEval(c: Any, l: Any, cl: Any, co: Any): Any =
+    compute(c.asInstanceOf[Array[Byte]], cl.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("adcScanCoarse", this)
+    nullSafeCodeGen(ctx, ev, (c, _, cl, _) =>
+      s"${ev.value} = $ref.compute($c, $cl);")
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression,
+      newFourth: Expression): AdcScanCoarse =
+    copy(codes = newFirst, lut = newSecond, cell = newThird,
+      coarse = newFourth)
+}
+
+/** `pq_decode(codes, book)`: the reconstruction a packed PQ code
+  * stands for — subspace j's centroid at slot codes[j], concatenated in
+  * subspace order. `book` is the foldable [M][K_j][w_j] codebook. This
+  * is the decode path the ADC identity certificate compares the table
+  * sum against; it shares no arithmetic with [[AdcScan]]. Same
+  * refusals as the scan. */
+case class PqDecode(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == BinaryType && Adc.isTables(right.dataType) &&
+        right.foldable) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (binary codes, foldable " +
+        "array<array<array<double>>> codebook), got " +
+        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def prettyName: String = "pq_decode"
+
+  @transient private lazy val book = Adc.tables(right)
+
+  def compute(codes: Array[Byte]): ArrayData = {
+    Adc.requireWidth(codes, book.length)
+    val cents = Array.tabulate(book.length) { j =>
+      book(j)(Adc.slot(codes, j, book(j).length))
+    }
+    UnsafeArrayData.fromPrimitiveArray(Array.concat(cents.toIndexedSeq: _*))
+  }
+
+  override protected def nullSafeEval(c: Any, b: Any): Any =
+    compute(c.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pqDecode", this)
+    nullSafeCodeGen(ctx, ev, (c, _) => s"${ev.value} = $ref.compute($c);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqDecode =
     copy(left = newLeft, right = newRight)
 }

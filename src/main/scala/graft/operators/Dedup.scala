@@ -832,11 +832,9 @@ object Dedup {
   // back at PROBE time, and the probe REFUSES loudly when the live
   // corpus exceeds the pinned ceiling — never a silent recall cliff.
 
-  /** LSH store root — same scratch-root contract as
-    * [[Similarity.indexRoot]]; never under /root/testdata. */
-  def lshStoreRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft_tmp") +
-      "/lsh_store"
+  /** LSH store root under the shared
+    * [[graft.sources.Tables.scratchRoot]]. */
+  def lshStoreRoot: String = graft.sources.Tables.scratchRoot + "/lsh_store"
 
   /** On-disk location of the band store for a dataset directory. The
     * ceiling rides the path (the pqIndexPath convention), so a ceiling

@@ -31,10 +31,9 @@ object Etl {
   private def cleaned(s: SparkSession, dir: String): DataFrame =
     Cleaning.referenceClean(messyCustomer(s, dir), "codigo")
 
-  /** Where etl_csv_roundtrip materializes its layers. Parameterized so
-    * the driver/test harness can redirect it; never under /root/testdata. */
-  def roundtripRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft_tmp")
+  /** Where etl_csv_roundtrip materializes its layers: the shared
+    * [[graft.sources.Tables.scratchRoot]]. */
+  def roundtripRoot: String = graft.sources.Tables.scratchRoot
 
   /** Drop + physically clear a managed table so saveAsTable recreates
     * it cleanly: the catalog is in-memory per JVM but the managed

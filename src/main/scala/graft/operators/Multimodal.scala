@@ -729,11 +729,10 @@ object Multimodal {
   // loudly past the ceiling or on a sidecar/ceiling mismatch — the
   // dedup_incr_near_serve discipline applied to the image family.
 
-  /** pHash store root — same scratch-root contract as
-    * [[Similarity.indexRoot]]; never under /root/testdata. */
+  /** pHash store root under the shared
+    * [[graft.sources.Tables.scratchRoot]]. */
   def phashStoreRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft_tmp") +
-      "/phash_store"
+    graft.sources.Tables.scratchRoot + "/phash_store"
 
   /** On-disk store location for a dataset directory; the ceiling rides
     * the path (the pqIndexPath convention) so a ceiling change can

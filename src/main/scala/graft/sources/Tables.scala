@@ -13,6 +13,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * and Catalyst pushes the projection into the scan.
   */
 object Tables {
+  /** Root of every scratch store the engine writes (index and band
+    * stores, staged stream sources, ETL round-trip layers):
+    * `SPARK_GRAFT_TMP` when set, else `target/graft_tmp` under the
+    * working directory. Never a dataset directory. */
+  def scratchRoot: String = sys.env.getOrElse("SPARK_GRAFT_TMP",
+    java.nio.file.Paths.get("target", "graft_tmp").toAbsolutePath.toString)
+
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

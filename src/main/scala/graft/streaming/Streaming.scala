@@ -406,9 +406,8 @@ object Streaming {
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val sfName = sfDir.replaceAll(".*/", "")
-    val stage = Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft_tmp"),
-      "stream_src", sfName)
+    val stage = Paths.get(graft.sources.Tables.scratchRoot, "stream_src",
+      sfName)
     Files.createDirectories(stage)
     val link = stage.resolve("events.parquet")
     val src = Paths.get(sfDir, "events.parquet")

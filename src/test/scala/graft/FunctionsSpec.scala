@@ -965,4 +965,129 @@ class FunctionsSpec extends GraftSpec {
     assert(vad.exists(_.getLong(2) > 0) &&
       vad.exists(r => r.getLong(2) < r.getLong(1)))
   }
+
+  /** A 2-subspace, 2-dim-per-subspace PQ fixture: slot 0 of every
+    * subspace is the zero centroid, subspace 1 keeps only 2 live slots
+    * (a Lloyd pass dropped one), vector 4's reconstruction is zero. */
+  private val adcBook = Seq(
+    Seq(Seq(0.0, 0.0), Seq(1.0, 0.5), Seq(-0.25, 2.0)),
+    Seq(Seq(0.0, 0.0), Seq(0.75, -1.5)))
+  private val adcCodes = Seq(1L -> Seq(1, 1), 2L -> Seq(2, 0),
+    3L -> Seq(2, 1), 4L -> Seq(0, 0))
+  private val adcQueries = Seq(Seq(0.3, -0.7, 1.1, 0.2),
+    Seq(0.0, 0.0, 0.0, 0.0), Seq(-2.0, 0.125, 0.5, 3.0))
+
+  private def packed: org.apache.spark.sql.DataFrame =
+    adcCodes.map { case (id, cs) => (id, cs.map(_.toByte).toArray) }
+      .toDF("vec_id", "codes")
+
+  test("adc_scan equals the relational partial-dot sum, zero-norm " +
+    "vectors included") {
+    // one table per query (partial dots) plus the squared-norm table
+    val lut = adcQueries.map(q => adcBook.zipWithIndex.map { case (cs, j) =>
+      cs.map(c => c.indices.map(i => q(2 * j + i) * c(i)).sum) }) :+
+      adcBook.map(_.map(c => c.map(x => x * x).sum))
+    val got = packed.select(col("vec_id"),
+        call_function("adc_scan", col("codes"), typedlit(lut)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val rel = adcCodes.flatMap { case (id, cs) =>
+        cs.zipWithIndex.map { case (s, j) => (id, j, s) } }
+      .toDF("vec_id", "j", "slot")
+      .join(lut.zipWithIndex.flatMap { case (tab, t) =>
+          tab.zipWithIndex.flatMap { case (row, j) =>
+            row.zipWithIndex.map { case (v, s) => (t, j, s, v) } } }
+        .toDF("t", "j", "slot", "pd"), Seq("j", "slot"))
+      .groupBy("vec_id", "t").agg(sum("pd"))
+      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2))
+    assert(rel.length == adcCodes.size * lut.size)
+    rel.foreach { case ((id, t), want) =>
+      assert(math.abs(got(id)(t) - want) < 1e-9, s"vec $id table $t")
+    }
+    // the zero reconstruction scores 0 everywhere, and the zero query
+    // scores 0 against everything
+    assert(got(4L).forall(_ == 0.0))
+    assert(got.values.forall(_(1) == 0.0))
+    // pq_decode is the reconstruction the codes select
+    val dec = packed.select(col("vec_id"),
+        call_function("pq_decode", col("codes"), typedlit(adcBook)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    adcCodes.foreach { case (id, cs) =>
+      assert(dec(id) == cs.zipWithIndex.flatMap { case (s, j) => adcBook(j)(s) })
+    }
+  }
+
+  test("adc_scan coarse form adds the probed cell's term and NULLs " +
+    "unprobed tables") {
+    val lut = Seq(adcBook.map(_.map(_ => 1.0)), adcBook.map(_.map(_ => 2.0)))
+    // cell slot 0 is probed by table 0 only, slot 1 by both
+    val coarse = Seq(Seq(Some(0.5), None), Seq(Some(-1.0), Some(4.0)))
+    val got = packed.withColumn("cell", (col("vec_id") % 2).cast("int"))
+      .select(col("vec_id"), call_function("adc_scan", col("codes"),
+        typedlit(lut), col("cell"), typedlit(coarse)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Double](1)).toMap
+    assert(got(2L).toSeq == Seq[java.lang.Double](2.5, null))
+    assert(got(3L).toSeq == Seq[java.lang.Double](1.0, 8.0))
+  }
+
+  test("adc_scan and pq_decode refuse a code that points at an absent " +
+    "slot, a code of the wrong width, and an unknown IVF cell") {
+    def failure(df: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val lut = Seq(adcBook.map(_.map(_ => 1.0)))
+    // slot 2 of subspace 1 was dropped: only slots 0 and 1 are live
+    val absent = Seq((1L, Array[Byte](0, 2))).toDF("vec_id", "codes")
+    assert(failure(absent.select(call_function("adc_scan", col("codes"),
+      typedlit(lut)))).contains("absent slot 2 of subspace 1"))
+    assert(failure(absent.select(call_function("pq_decode", col("codes"),
+      typedlit(adcBook)))).contains("absent slot 2 of subspace 1"))
+    val short = Seq((1L, Array[Byte](1))).toDF("vec_id", "codes")
+    assert(failure(short.select(call_function("adc_scan", col("codes"),
+      typedlit(lut)))).contains("corrupt or foreign PQ store"))
+    assert(failure(packed.select(call_function("adc_scan", col("codes"),
+      typedlit(lut), lit(5), typedlit(Seq(Seq(0.0))))))
+      .contains("IVF cell slot 5 is absent"))
+  }
+
+  test("top_c keeps the (score DESC, id ASC) window ranking whatever " +
+    "the partitioning or merge order") {
+    import org.apache.spark.sql.expressions.Window
+    // heavy score ties (7 distinct values over 400 ids), one NaN, one
+    // NULL score, two groups
+    val rows = (1L to 400L).map { id =>
+      val score: Option[Double] =
+        if (id == 17) Some(Double.NaN) else if (id == 18) None
+        else Some((id * 37 % 7) / 7.0)
+      (id % 2, id, score)
+    }
+    val df = rows.toDF("g", "id", "score")
+    val w = Window.partitionBy(col("g"))
+      .orderBy(col("score").desc, col("id"))
+    val want = df.filter(col("score").isNotNull)
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 25)
+      .orderBy("g", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the payload must ride with its own entry through partial merges
+    def topC(d: org.apache.spark.sql.DataFrame) = d.groupBy(col("g"))
+      .agg(call_function("top_c", col("score"), col("id"),
+        struct(col("id").cast("string").as("s"),
+          array(col("id"), col("g")).as("a")), lit(25)).as("t"))
+      .select(col("g"), posexplode(col("t")).as(Seq("p", "c")))
+      .orderBy("g", "p").collect()
+      .map { r =>
+        val c = r.getStruct(2)
+        val pl = c.getStruct(2)
+        assert(pl.getString(0) == c.getLong(0).toString &&
+          pl.getSeq[Long](1) == Seq(c.getLong(0), r.getLong(0)))
+        (r.getLong(0), c.getLong(0))
+      }.toSeq
+    assert(want.length == 50 && want.find(_._1 == 1L).contains((1L, 17L)))
+    assert(topC(df.coalesce(1)) == want)
+    assert(topC(df.repartition(8)) == want)
+    assert(topC(df.repartition(13, col("id")).sortWithinPartitions(
+      col("id").desc)) == want)
+    assert(topC(df.orderBy(rand(3))) == want)
+  }
 }

@@ -6,16 +6,14 @@ package graft
   * later edit introduces elsewhere. */
 class PlanLintSpec extends GraftSpec {
 
-  /** knn_brute / knn_ivf / knn_pq_adc / knn_ivfpq — and their
-    * serve-only splits, which run the same query-table construction
-    * against the loaded index — broadcast a BOUNDED set (the query
-    * set / the fixed centroid budget / the 1-row packed PQ codebook)
-    * into a crossJoin by design — the only intentional nested-loop
-    * joins in the library, with their scale contract documented in
-    * Similarity.scala. */
+  /** knn_brute / knn_ivf / knn_hamming broadcast a BOUNDED set (the
+    * query set / the fixed centroid budget) into a crossJoin by design
+    * — the only intentional nested-loop joins in the library, with
+    * their scale contract documented in Similarity.scala. (The PQ /
+    * IVF-PQ faces score packed codes with the adc_scan kernel against
+    * plan-literal lookup tables and join nothing nested-loop.) */
   private val intentionalCross =
-    Set("knn_brute", "knn_ivf", "knn_pq_adc", "knn_ivfpq",
-      "knn_pq_serve", "knn_ivfpq_serve", "knn_hamming",
+    Set("knn_brute", "knn_ivf", "knn_hamming",
       // broadcasts a 1-ROW packed source-count vector (the same
       // bounded-codebook shape as the ANN cell assignment); see
       // Sampling.interleave's scale note
@@ -51,8 +49,8 @@ class PlanLintSpec extends GraftSpec {
       // (type, day) aggregate — the skew-audit totals shape
       "etl_freshness",
       // two pqAssign passes, each crossing the corpus with the 1-ROW
-      // packed PQ codebook — the same bounded-codebook shape as
-      // knn_pq_adc
+      // packed PQ codebook — the bounded-codebook shape of
+      // emb_cell_purity below
       "emb_pq_distortion",
       // the broadcast-codebook argmax assignment (1-ROW packed
       // codebook cross) feeding the (cell, label) census

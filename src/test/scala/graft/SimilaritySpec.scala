@@ -560,19 +560,50 @@ class SimilaritySpec extends GraftSpec {
 
   test("ADC scores equal cosine against the reconstruction; recall " +
     "vs brute is sane") {
-    // the face's in-plan certificate, re-checked here for every row
-    val face = Similarity.knnPqAdc(vecs, col("vec_id") < 10).collect()
+    // the shipped kernel path at the library-default geometry (M=4
+    // subspaces of 16 dims, two Lloyd passes) with C = k: the exact
+    // re-rank only reorders ADC's own top-5, so the emitted set IS the
+    // pure-ADC ranking, and every row carries the in-plan certificate
+    val face = Similarity.knnPqAdcExact(vecs, col("vec_id") < 10,
+      candidates = 5, m = Similarity.PqM,
+      refineIters = Similarity.RefineIters).collect()
     assert(face.length == 50)
-    assert(face.forall(_.getBoolean(2)), "ADC != reconstruction cosine")
+    assert(face.forall(_.getBoolean(4)), "ADC != reconstruction cosine")
     // recall floor: PQ with 4x16 codebooks on near-random 64-dim data
     // retains limited structure — the floor is deliberately modest and
     // the real contract is the identity certificate above
     val brute = Similarity.knnBrute(vecs, col("vec_id") < 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val adc = Similarity.pqAdcRanked(vecs, col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val adc = face.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & adc).size.toDouble / brute.size
     assert(recall >= 0.1, s"ADC recall vs brute $recall collapsed")
+  }
+
+  test("PQ / IVF-PQ keys and emb_recall_audit give identical rows under " +
+    "1, 4 and 32 shuffle partitions with AQE on and off") {
+    val keys = Seq("knn_pq_adc", "knn_ivfpq", "knn_pq_serve",
+      "knn_ivfpq_serve", "emb_recall_audit")
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled")
+    val saved = confs.map(c => c -> spark.conf.get(c))
+    def rows(parts: Int, aqe: Boolean): Map[String, Seq[String]] = {
+      spark.conf.set(confs(0), parts.toString)
+      spark.conf.set(confs(1), aqe.toString)
+      keys.map(k => k -> SparkEntry.queries(k)(spark, sf).collect()
+        .map(_.toString).toSeq).toMap
+    }
+    try {
+      val base = rows(4, aqe = true)
+      keys.foreach(k => assert(base(k).nonEmpty, s"$k returned no rows"))
+      for (parts <- Seq(1, 4, 32); aqe <- Seq(true, false)
+           if parts != 4 || !aqe) {
+        val got = rows(parts, aqe)
+        keys.foreach { k =>
+          assert(got(k) == base(k),
+            s"$k changed at $parts shuffle partitions with AQE $aqe")
+        }
+      }
+    } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
   }
 
   test("standardize: per-dim zero mean / unit variance on the fixture, " +
