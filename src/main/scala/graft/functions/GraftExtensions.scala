@@ -354,6 +354,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         PqDecode(children(0), children(1))
       }))
     ext.injectFunction((
+      FunctionIdentifier("pq_encode"),
+      info("pq_encode",
+        "pq_encode(v, book) - the packed BINARY(M) PQ code of v: byte j " +
+          "is the slot of the centroid nearest v's subspace-j slice " +
+          "(cosine DESC, then slot ASC) in a foldable [M][K][w] codebook"),
+      (children: Seq[Expression]) => {
+        expectArity("pq_encode(v, book)", 2, children)
+        PqEncode(children(0), children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("pq_assign"),
+      info("pq_assign",
+        "pq_assign(v, book) - per subspace, struct(slot, sim): the " +
+          "nearest centroid's slot and cosine in a foldable [M][K][w] " +
+          "codebook (pq_encode's order, any number of slots)"),
+      (children: Seq[Expression]) => {
+        expectArity("pq_assign(v, book)", 2, children)
+        PqAssign(children(0), children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("pq_lloyd"),
+      info("pq_lloyd",
+        "pq_lloyd(v, book) - one Lloyd pass: per (subspace, slot) of a " +
+          "foldable [M][K][w] codebook, [count, fixed-point sums " +
+          "floor(x*1e9)...] of the vectors assigned there, as exact BIGINTs"),
+      (children: Seq[Expression]) => {
+        expectArity("pq_lloyd(v, book)", 2, children)
+        PqLloyd(children(0), children(1))
+      }))
+    ext.injectFunction((
       FunctionIdentifier("top_c"),
       info("top_c",
         "top_c(score, id, payload, c) - the c best (score DESC, id ASC) " +

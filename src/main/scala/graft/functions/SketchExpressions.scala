@@ -357,3 +357,120 @@ object TopC {
     if (better(b.score, b.id, a)) -1 else if (better(a.score, a.id, b)) 1
     else 0
 }
+
+/** One Lloyd (k-means) pass as an aggregate: `pq_lloyd(v, book)`
+  * assigns every input vector, per subspace, to its nearest slot of the
+  * foldable [M][K_j][w_j] codebook ([[PqCodebook.assign]] — the order
+  * `pq_encode` encodes with) and accumulates, per (subspace, slot), the
+  * member count and the fixed-point sums Σ ⌊x_i·1e9⌋ of the members'
+  * slice coordinates as exact BIGINTs. The result is [M][K_j][1 + w_j]:
+  * element 0 the count, then the w_j sums. The next centroid is
+  * sum / (count·1e9) — the division stays with the caller, on the
+  * driver — and integer sums make it bit-identical in any partitioning
+  * or merge order.
+  *
+  * State is K·(Dim + M) longs for the whole codebook, independent of
+  * the input row count, so the exchange carries one buffer per map
+  * task. A sum that overflows BIGINT fails the query rather than wrap.
+  * NULL vectors are skipped. */
+case class PqLloyd(
+    child: Expression,
+    codebook: Expression,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Array[Long]] with PqBookInput {
+
+  override def vector: Expression = child
+  override def children: Seq[Expression] = Seq(child, codebook)
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    ArrayType(ArrayType(ArrayType(LongType, false), false), false)
+  override def prettyName: String = "pq_lloyd"
+
+  /** buffer offset of cell (j, s): [count, sum_0 .. sum_{w_j − 1}] */
+  @transient private lazy val base: Array[Array[Int]] = {
+    var at = 0
+    book.cents.indices.map { j =>
+      book.cents(j).indices.map { _ =>
+        val b = at; at += 1 + book.widths(j); b
+      }.toArray
+    }.toArray
+  }
+  @transient private lazy val size: Int =
+    book.cents.indices.map(j =>
+      book.cents(j).length * (1 + book.widths(j))).sum
+  @transient private lazy val slots = new Array[Int](book.m)
+  @transient private lazy val sims = new Array[Double](book.m)
+
+  private def add(a: Long, b: Long): Long =
+    try Math.addExact(a, b)
+    catch {
+      case _: ArithmeticException => throw new ArithmeticException(
+        "pq_lloyd: a fixed-point coordinate sum overflows BIGINT " +
+          "(|x|*1e9 summed over one cell exceeds 2^63)")
+    }
+
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](size)
+
+  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
+    val v = child.eval(input)
+    if (v != null) {
+      val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val cb = book
+      cb.assign(a, floatInput, slots, sims)
+      var j = 0
+      while (j < cb.m) {
+        val b = base(j)(slots(j))
+        buffer(b) = add(buffer(b), 1L)
+        val (off, w) = (cb.offsets(j), cb.widths(j))
+        var i = 0
+        while (i < w) {
+          buffer(b + 1 + i) = add(buffer(b + 1 + i),
+            math.floor(VectorInput.get(a, off + i, floatInput) * 1e9).toLong)
+          i += 1
+        }
+        j += 1
+      }
+    }
+    buffer
+  }
+
+  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < buffer.length) { buffer(i) = add(buffer(i), other(i)); i += 1 }
+    buffer
+  }
+
+  override def eval(buffer: Array[Long]): Any = {
+    val cb = book
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](cb.m) { j =>
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          Array.tabulate[Any](cb.cents(j).length) { s =>
+            org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+              .fromPrimitiveArray(java.util.Arrays.copyOfRange(buffer,
+                base(j)(s), base(j)(s) + 1 + cb.widths(j)))
+          })
+      })
+  }
+
+  override def serialize(buffer: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 * buffer.length)
+    bb.asLongBuffer().put(buffer)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val out = new Array[Long](bytes.length / 8)
+    ByteBuffer.wrap(bytes).asLongBuffer().get(out)
+    out
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): PqLloyd =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): PqLloyd =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): PqLloyd =
+    copy(child = newChildren(0), codebook = newChildren(1))
+}

@@ -647,3 +647,167 @@ case class PqDecode(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): PqDecode =
     copy(left = newLeft, right = newRight)
 }
+
+/** A foldable [M][K_j][w_j] PQ codebook — subspace j's centroids in
+  * slot order — parsed once per expression instance for the encode
+  * kernels ([[PqEncode]], [[PqAssign]], [[PqLloyd]]), with every
+  * centroid's norm. A vector's subspace j is its slice
+  * [Σ_{i<j} w_i, Σ_{i≤j} w_i). */
+private[functions] final class PqCodebook(val cents: Array[Array[Array[Double]]]) {
+  val m: Int = cents.length
+  val widths: Array[Int] = cents.map(cs => if (cs.isEmpty) 0 else cs(0).length)
+  val offsets: Array[Int] = widths.scanLeft(0)(_ + _)
+  def dim: Int = offsets(m)
+  private val nrm = cents.map(_.map(c => math.sqrt(c.map(x => x * x)
+    .foldLeft(0.0)(_ + _))))
+
+  /** Why the codebook cannot encode with at most `maxSlots` slots per
+    * subspace, or None: no subspace, an empty subspace (it could not
+    * assign its slice anywhere), ragged centroid widths, or more
+    * centroids than a code can address. */
+  def defect(maxSlots: Int): Option[String] =
+    if (m == 0) Some("the PQ codebook has no subspace")
+    else cents.indices.collectFirst {
+      case j if cents(j).isEmpty => s"subspace $j of the PQ codebook is empty"
+      case j if widths(j) == 0 || cents(j).exists(_.length != widths(j)) =>
+        s"subspace $j of the PQ codebook has ragged or empty centroids"
+      case j if cents(j).length > maxSlots =>
+        s"subspace $j holds ${cents(j).length} centroids; a one-byte code " +
+          s"addresses at most $maxSlots (K ≤ $maxSlots)"
+    }
+
+  /** Per subspace j, the slot of the centroid nearest v's slice and its
+    * cosine, written to slots(j) / sims(j). Order: cosine descending as
+    * Spark orders doubles (NaN above every number, -0.0 = 0.0), then
+    * the smaller slot. A zero-norm side scores -2.0 (Similarity.safeCos).
+    * Dots and norms are DotProduct's sequential double loops, so the
+    * result equals the relational argmax bit for bit. A vector whose
+    * width is not the codebook's is refused. */
+  def assign(v: ArrayData, f: Boolean, slots: Array[Int],
+      sims: Array[Double]): Unit = {
+    if (v.numElements() != dim) throw new IllegalStateException(
+      s"${v.numElements()}-dim vector against a $dim-dim PQ codebook")
+    val x = Array.tabulate(dim)(VectorInput.get(v, _, f))
+    var j = 0
+    while (j < m) {
+      val (off, w, cs) = (offsets(j), widths(j), cents(j))
+      var nv = 0.0
+      var i = 0
+      while (i < w) { nv += x(off + i) * x(off + i); i += 1 }
+      val vn = math.sqrt(nv)
+      var best = 0
+      var bestSim = 0.0
+      var s = 0
+      while (s < cs.length) {
+        val (c, cn) = (cs(s), nrm(j)(s))
+        val sim =
+          if (vn == 0 || cn == 0) -2.0
+          else {
+            var d = 0.0
+            i = 0
+            while (i < w) { d += x(off + i) * c(i); i += 1 }
+            d / (vn * cn)
+          }
+        if (s == 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(sim, bestSim) > 0) { best = s; bestSim = sim }
+        s += 1
+      }
+      slots(j) = best
+      sims(j) = bestSim
+      j += 1
+    }
+  }
+}
+
+/** Shared analysis of the (vector, foldable codebook) kernels. */
+private[functions] trait PqBookInput { self: Expression =>
+  def vector: Expression
+  def codebook: Expression
+  /** the most slots per subspace the output can address */
+  def maxSlots: Int = Int.MaxValue
+
+  @transient lazy val book: PqCodebook = new PqCodebook(Adc.tables(codebook))
+  @transient lazy val floatInput: Boolean = VectorInput.isFloat(vector.dataType)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (!VectorInput.isVector(vector.dataType) ||
+        !Adc.isTables(codebook.dataType) || !codebook.foldable)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (array<double|float> vector, foldable " +
+          "array<array<array<double>>> codebook), got " +
+          s"${vector.dataType.catalogString} and " +
+          codebook.dataType.catalogString)
+    else book.defect(maxSlots).fold[TypeCheckResult](
+      TypeCheckResult.TypeCheckSuccess)(TypeCheckResult.TypeCheckFailure(_))
+}
+
+/** `pq_encode(v, book)`: the packed PQ code of v — BINARY(M), byte j
+  * the slot of the centroid nearest v's subspace-j slice
+  * ([[PqCodebook.assign]]'s order: cosine descending, then the smaller
+  * slot). This is the code `adc_scan` and `pq_decode` read. One fused
+  * M·K·w loop per row; a codebook with more than 256 slots in a
+  * subspace, or an empty subspace, is refused at analysis. */
+case class PqEncode(left: Expression, right: Expression)
+    extends BinaryExpression with PqBookInput {
+
+  override def vector: Expression = left
+  override def codebook: Expression = right
+  override def maxSlots: Int = 256
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "pq_encode"
+
+  def compute(v: ArrayData): Array[Byte] = {
+    val slots = new Array[Int](book.m)
+    book.assign(v, floatInput, slots, new Array[Double](book.m))
+    slots.map(_.toByte)
+  }
+
+  override protected def nullSafeEval(v: Any, b: Any): Any =
+    compute(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pqEncode", this)
+    nullSafeCodeGen(ctx, ev, (v, _) => s"${ev.value} = $ref.compute($v);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqEncode =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `pq_assign(v, book)`: per subspace, struct(slot, sim) — the nearest
+  * slot and its cosine, in [[PqEncode]]'s order. The unpacked form:
+  * an IVF coarse assignment (M = 1, any number of cells) reads
+  * element 1's slot, and the PQ certificates read the kernel's own
+  * best cosine to check against an independently recomputed one. */
+case class PqAssign(left: Expression, right: Expression)
+    extends BinaryExpression with PqBookInput {
+
+  import org.apache.spark.sql.types.{StructField, StructType}
+
+  override def vector: Expression = left
+  override def codebook: Expression = right
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("slot", IntegerType, nullable = false),
+    StructField("sim", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "pq_assign"
+
+  def compute(v: ArrayData): ArrayData = {
+    val (slots, sims) = (new Array[Int](book.m), new Array[Double](book.m))
+    book.assign(v, floatInput, slots, sims)
+    new GenericArrayData(Array.tabulate[Any](book.m)(j =>
+      org.apache.spark.sql.catalyst.InternalRow(slots(j), sims(j))))
+  }
+
+  override protected def nullSafeEval(v: Any, b: Any): Any =
+    compute(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pqAssign", this)
+    nullSafeCodeGen(ctx, ev, (v, _) => s"${ev.value} = $ref.compute($v);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqAssign =
+    copy(left = newLeft, right = newRight)
+}

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 
 import graft.functions.HyperplaneBits
 import graft.plans.Loops
@@ -18,9 +18,14 @@ import graft.sources.{Knobs, Tables}
   *  - knn_brute: broadcasts the (small) QUERY set and streams the big
   *    side once. Documented non-scaling path for the query-set axis —
   *    correctness baseline for the IVF variant.
-  *  - knn_ivf: k-means-lite cell assignment (fixed deterministic seed
-  *    vectors as centroids, one assignment pass), candidates shuffle by
-  *    cell; probing nprobe cells bounds work per query by cell size.
+  *  - knn_ivf: k-means cells trained on the driver over a bounded
+  *    hash-order sample (one `pq_lloyd` aggregate per Lloyd pass),
+  *    corpus assigned by the `pq_assign` kernel against a plan-literal
+  *    codebook; candidates shuffle by cell; probing nprobe cells bounds
+  *    work per query by cell size.
+  *  - PQ / IVF-PQ: the same trainer builds the codebooks, `pq_encode`
+  *    packs every vector in one map-only pass, and `adc_scan` scores
+  *    the packed codes (see the ADC and persisted-index sections).
   *
   * Hyperplanes come from a fixed seed inside the native
   * hyperplane_bits expression — deterministic across runs and cluster
@@ -77,7 +82,7 @@ object Similarity {
     * recall@5 at nprobe=2 improves 0.36 → 0.42 over unrefined seed
     * points; corpora with real cluster structure gain much more.
     * Beyond ~3 passes the assignment churn no longer pays for the
-    * extra corpus scans. */
+    * extra passes (one bounded-sample aggregate job each). */
   val RefineIters = 2
 
   /** Native codegen'd dot product (graft.functions.DotProduct) — a
@@ -754,49 +759,34 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Per-row top-n cell assignment against a broadcast 1-row codebook
+  /** Per-row top-n probe cells against a broadcast 1-row codebook
     * (`[cents: array<struct<c_id,c_e,c_nrm>>]`) — exchange-free: the
-    * corpus side never moves. (The previous shape — crossJoin to n·C
-    * rows + a row_number window partitioned by vec_id — shuffled the
-    * n·C expansion through an exchange just to pick each row's argmax:
-    * a 65536× row amplification at the documented production C=2^16.)
+    * query side never moves. One row per (row, probed cell), in the
+    * order sim DESC, c_id ASC — the `pq_assign` kernel's order, so a
+    * query's first probe is the cell the corpus side was assigned to.
+    * A bounded per-row sort of C entries: query side only (every
+    * corpus-side nearest-centroid assignment runs the native kernel).
     *
-    * `sims` materializes as a column before the fold/sort (HOF
-    * arguments re-evaluate per element — see Dedup.banded). Degenerate
+    * `sims` materializes as a column before the sort (HOF arguments
+    * re-evaluate per element — see Dedup.banded). Degenerate
     * zero-norm rows go through [[safeCos]]: all their sims collapse to
-    * -2.0 and the tie-break assigns the smallest c_id deterministically
-    * (under ANSI mode the raw division would abort the query; pre-ANSI
-    * NaN ordering was run-to-run stable but opaque). */
+    * -2.0 and the tie-break orders them by c_id deterministically
+    * (under ANSI mode the raw division would abort the query). */
   private def nearestCells(codebook: DataFrame)(df: DataFrame,
-      n: Int): DataFrame = {
-    val withSims = df.crossJoin(codebook)
+      n: Int): DataFrame =
+    df.crossJoin(codebook)
       .select(col("vec_id"), col("e"), col("nrm"),
         transform(col("cents"), c =>
           struct(safeCos(dot(col("e"), c.getField("c_e")),
             col("nrm"), c.getField("c_nrm")).as("sim"),
             c.getField("c_id").as("cell"))).as("sims"))
-    val cellCol =
-      if (n == 1)
-        // O(C) fold: running argmax (sim DESC, cell ASC on ties)
-        aggregate(col("sims"),
-          struct(lit(Double.NegativeInfinity).as("sim"),
-            lit(Long.MaxValue).as("cell")),
-          (acc, x) => when(
-            x.getField("sim") > acc.getField("sim") ||
-              (x.getField("sim") === acc.getField("sim") &&
-                x.getField("cell") < acc.getField("cell")), x)
-            .otherwise(acc)).getField("cell")
-      else
-        // bounded per-row sort of C entries — query side only
+      .select(col("vec_id"), col("e"), col("nrm"),
         explode(transform(slice(array_sort(col("sims"), (a, b) =>
           when(a.getField("sim") > b.getField("sim"), -1)
             .when(a.getField("sim") < b.getField("sim"), 1)
             .when(a.getField("cell") < b.getField("cell"), -1)
             .when(a.getField("cell") > b.getField("cell"), 1)
-            .otherwise(0)), 1, n), x => x.getField("cell")))
-    withSims.select(col("vec_id"), col("e"), col("nrm"),
-      cellCol.as("cell"))
-  }
+            .otherwise(0)), 1, n), x => x.getField("cell"))).as("cell"))
 
   /** Pack a centroid frame (c_id, c_e, c_nrm) into the broadcast 1-row
     * codebook nearestCells consumes. */
@@ -804,43 +794,6 @@ object Similarity {
     broadcast(centroids.agg(collect_list(
       struct(col("c_id"), col("c_e"), col("c_nrm"))).as("cents")))
 
-  /** One Lloyd (k-means) refinement pass: reassign every vector to its
-    * nearest centroid, then replace each centroid with its cell's
-    * elementwise mean. The mean uses the fixed-point integer-sum trick
-    * from [[labelCentroids]]: floor(v·1e9) sums as exact BIGINTs, so
-    * the refined centroids are BIT-IDENTICAL regardless of partition
-    * count or reduce order — without it, float-sum reorder could flip
-    * boundary assignments between runs. Shuffle cost: the posexplode
-    * groupBy is map-side-combined to ≤C·Dim rows per partition. Cells
-    * that lose all members drop out (codebook may shrink — fine, the
-    * geometry just got coarser there). */
-  private def refineCentroids(corpus: DataFrame,
-      codebook: DataFrame): DataFrame = {
-    val assigned = nearestCells(codebook)(corpus, 1)
-    assigned
-      .select(col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos"))
-      .agg((sum(floor(col("v").cast("double") * 1e9).cast("long"))
-        / (count(lit(1)) * 1e9)).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell").as("c_id"),
-        transform(col("pm"), x => x.getField("m").cast("float")).as("c_e"))
-      .withColumn("c_nrm", l2norm(col("c_e")))
-  }
-
-  /** Deterministic IVF codebook: a uniform seed sample (smallest
-    * xxhash64(vec_id) — one TakeOrderedAndProject pass) refined by
-    * `refineIters` Lloyd passes so cells track the corpus's actual
-    * cluster geometry instead of random points. Assignment cost is
-    * O(n·C) with CONSTANT C; the broadcast stays ~C·Dim·8 bytes at any
-    * corpus size. */
-  def ivfCodebook(corpus: DataFrame, centroidBudget: Int = CentroidBudget,
-      refineIters: Int = RefineIters): DataFrame =
-    packCodebook(ivfCodebookRows(corpus, centroidBudget, refineIters))
-
-  /** [[ivfCodebook]] as centroid ROWS (c_id, c_e, c_nrm) — the form the
-    * residual computation of [[ivfPqIndex]] joins against. */
   /** Deterministic bounded codebook-training sample: the min(n, cap)
     * vectors with the smallest (xxhash64(vec_id), vec_id) — a rank
     * threshold, not a rate, so training cost is CONSTANT in corpus
@@ -850,45 +803,111 @@ object Similarity {
     * max_points_per_centroid discipline — and assigns full-corpus).
     * Hash order makes the sample corpus-representative and stable
     * under re-partitioning; one TakeOrderedAndProject materializes
-    * it. Below the cap the sample IS the corpus, so gate scales train
-    * bit-identically to the pre-sample code. */
+    * it. Below the cap the sample IS the corpus. */
   private def trainingSample(vecs: DataFrame, cap: Int): DataFrame =
-    vecs.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(cap)
+    vecs.select(col("vec_id"), col("embedding"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(cap)
 
-  def ivfCodebookRows(corpus: DataFrame,
-      centroidBudget: Int = CentroidBudget,
-      refineIters: Int = RefineIters): DataFrame = {
-    val seed = corpus
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(centroidBudget)
-      .toDF("c_id", "c_e", "c_nrm")
-    // Lloyd refinement over the bounded sample (the seed is its hash-
-    // order prefix); ASSIGNMENT stays full-corpus in every caller
-    val train = trainingSample(corpus, 256 * centroidBudget)
-      .localCheckpoint(true)
-    (0 until refineIters).foldLeft(seed) { (rows, _) =>
-      refineCentroids(train, packCodebook(rows))
+  /** A codebook trained on the driver: subspace j's centroids in slot
+    * order, which is ascending c_id (a centroid's c_id is the vec_id of
+    * the seed vector it grew from). Centroids are floats, as stored. */
+  private final case class Trained(ids: Array[Array[Long]],
+      cents: Array[Array[Array[Float]]]) {
+    /** the foldable [M][K_j][w] codebook the encode kernels read */
+    lazy val lit: Column =
+      tableLit(cents.map(_.map(_.map(_.toDouble))), Tables3)
+
+    /** `pq_encode(v, this)`: the packed BINARY(M) code */
+    def encode(v: Column): Column = call_function("pq_encode", v, lit)
+
+    /** `pq_assign(v, this)`: per subspace, struct(slot, sim) */
+    def assign(v: Column): Column = call_function("pq_assign", v, lit)
+
+    /** subspace j's centroids in slot order, as the stored floats */
+    def centroids(j: Column): Column = element_at(floatLit, j + 1)
+    private lazy val floatLit: Column =
+      tableLit(cents, ArrayType(ArrayType(Floats, false), false))
+
+    /** subspace j's centroid at `slot`, as the stored floats */
+    def centroid(j: Column, slot: Column): Column =
+      element_at(centroids(j), slot + 1)
+
+    /** (m, c_id, c_e, c_nrm, slot) rows as a local frame */
+    def frame(spark: SparkSession): DataFrame = {
+      import org.apache.spark.sql.Row
+      val rows = for (j <- cents.indices; s <- cents(j).indices) yield {
+        val c = cents(j)(s).map(_.toDouble)
+        Row(j, ids(j)(s), cents(j)(s).toSeq,
+          math.sqrt(dotAt(c, 0, c, 0, c.length)), s)
+      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "m INT, c_id BIGINT, c_e ARRAY<FLOAT>, c_nrm DOUBLE, slot INT"))
+    }
+  }
+
+  /** Deterministic k-means codebooks over `m` subspaces of Dim/m dims:
+    * the seed is the k hash-order-first vectors, sliced into every
+    * subspace, then `iters` Lloyd passes over the bounded
+    * [[trainingSample]] of 256·k vectors, checkpointed once. Each pass
+    * is ONE `pq_lloyd` aggregate over the sample — every vector's
+    * per-subspace argmax and the members' fixed-point sums
+    * ⌊x·1e9⌋ as exact BIGINTs (the [[labelCentroids]] trick), so the
+    * means are BIT-IDENTICAL at any partitioning; the driver divides
+    * them back (sum / (count·1e9), stored as float) and drops cells
+    * that lost all members (the codebook may shrink — the geometry just
+    * got coarser there). State crossing the wire per pass is K·(Dim+M)
+    * longs per map task, independent of the corpus. Returns the seed
+    * and every pass's codebook, in order. Consumers assign the FULL
+    * corpus against the last one. */
+  private def kmeans(vecs: DataFrame, k: Int, m: Int,
+      iters: Int): Seq[Trained] = {
+    val sample = trainingSample(vecs, 256 * k).localCheckpoint(true)
+    val seed = sample.orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .limit(k).collect().sortBy(_.getLong(0))
+    require(seed.nonEmpty, "k-means needs a non-empty corpus to seed from")
+    val w = Dim / m
+    val first = Trained(Array.fill(m)(seed.map(_.getLong(0))),
+      Array.tabulate(m)(j => seed.map(_.getSeq[Float](1)
+        .slice(j * w, (j + 1) * w).toArray)))
+    (1 to iters).scanLeft(first) { (cb, _) =>
+      val cells = sample
+        .agg(call_function("pq_lloyd", col("embedding"), cb.lit))
+        .head().getSeq[collection.Seq[collection.Seq[Long]]](0)
+      val kept = cells.map(_.zipWithIndex.filter(_._1.head > 0))
+      Trained(
+        kept.zipWithIndex.map { case (cs, j) =>
+          cs.map(c => cb.ids(j)(c._2)).toArray }.toArray,
+        kept.map(_.map { case (c, _) =>
+          c.tail.map(sum => (sum.toDouble / (c.head.toDouble * 1e9)).toFloat)
+            .toArray }.toArray).toArray)
     }
   }
 
   /** IVF approximate top-k: assign every vector to its nearest
-    * centroid (broadcast — FIXED centroid budget, independent of
-    * corpus size), probe the nprobe nearest cells per query, exact
-    * cosine only within probed cells. With `nprobe = centroidBudget`
-    * every cell is probed and the result is EXACTLY brute force — the
-    * correctness face runs that configuration against the brute
-    * oracle, which gates the whole IVF pipeline (assignment, cell
-    * join, dedup, ranking) end-to-end. */
+    * centroid (the `pq_assign` kernel against a plan-literal codebook —
+    * FIXED centroid budget, independent of corpus size; no join),
+    * probe the nprobe nearest cells per query, exact cosine only
+    * within probed cells. Cells are keyed by slot, whose order is c_id
+    * order, so both sides break ties as [[nearestCells]] does. With
+    * `nprobe = centroidBudget` every cell is probed and the result is
+    * EXACTLY brute force — the correctness face runs that
+    * configuration against the brute oracle, which gates the whole IVF
+    * pipeline (assignment, cell join, dedup, ranking) end-to-end. */
   def knnIvf(vecs: DataFrame, queryPred: Column, k: Int = 5,
       nprobe: Int = 2, centroidBudget: Int = CentroidBudget,
       refineIters: Int = RefineIters): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
-      l2norm(col("embedding")).as("nrm"))
-    val codebook = ivfCodebook(corpus, centroidBudget, refineIters)
-    val assigned = nearestCells(codebook)(corpus, 1)
-      .toDF("neighbor_id", "n_e", "n_nrm", "cell")
-    val probes = nearestCells(codebook)(corpus.filter(queryPred), nprobe)
+    val cells = kmeans(vecs, centroidBudget, 1, refineIters).last
+    val assigned = vecs.select(col("vec_id").as("neighbor_id"),
+      col("embedding").as("n_e"), l2norm(col("embedding")).as("n_nrm"),
+      element_at(cells.assign(col("embedding")), 1)
+        .getField("slot").cast("long").as("cell"))
+    val codebook = packCodebook(cells.frame(vecs.sparkSession)
+      .select(col("slot").cast("long").as("c_id"), col("c_e"), col("c_nrm")))
+    val probes = nearestCells(codebook)(vecs.filter(queryPred).select(
+        col("vec_id"), col("embedding").as("e"),
+        l2norm(col("embedding")).as("nrm")), nprobe)
       .toDF("query_id", "q_e", "q_nrm", "cell")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
@@ -915,169 +934,46 @@ object Similarity {
     * a 10⁹-vector index live in RAM for ADC scanning. */
   val PqK = 16
 
-  /** One row per (vector, subspace): `e` = the mth Dim/m-slice.
-    * Total bytes ≈ the corpus itself — the subspace axis adds rows,
-    * not data. */
-  private def pqSubvectors(vecs: DataFrame, m: Int): DataFrame = {
-    val sub = Dim / m
-    vecs.select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0), lit(m - 1))).as("m"))
-      .select(col("vec_id"), col("m"),
-        slice(col("embedding"), col("m") * sub + 1, lit(sub)).as("e"))
-      .withColumn("nrm", l2norm(col("e")))
-  }
-
-  /** The all-subspace PQ codebook as ONE broadcast row, nested BY
-    * SUBSPACE (`centsByM[m+1]` = that subspace's entries) — M·K·(Dim/M)
-    * floats ≈ K·Dim, independent of corpus size: assignment reads its
-    * own subspace in O(1) instead of filtering all M·K entries per
-    * subvector row (O(M²·K) interpreted HOF evaluations per vector,
-    * which bites exactly when the geometry is finest — the knn_pq_adc
-    * face's m=32, or a production K=256). Every subspace is
-    * structurally present: each subvector has a nearest cell, so no m
-    * loses all its centroids in a Lloyd pass. */
-  private def pqPackByM(centRows: DataFrame): DataFrame =
-    broadcast(centRows
-      .groupBy(col("m"))
-      .agg(collect_list(
-        struct(col("c_id"), col("c_e"), col("c_nrm"))).as("ents"))
-      .agg(array_sort(collect_list(struct(col("m"), col("ents"))))
-        .as("me"))
-      .select(transform(col("me"), x => x.getField("ents"))
-        .as("centsByM")))
-
-  /** Per-row nearest centroid WITHIN the row's subspace: O(1) lookup of
-    * the row's subspace entries in the by-subspace broadcast codebook,
-    * then a fold-argmax (cosine, ties to the smaller c_id — same
-    * total-order contract as nearestCells), plus the max similarity as
-    * an independently-computed optimality certificate. Corpus side
-    * never shuffles. `ents` materializes as a column before the
-    * transform (HOF arguments re-evaluate per element). */
-  private def pqAssign(sub: DataFrame, packedByM: DataFrame): DataFrame = {
-    val withSims = sub.crossJoin(packedByM)
-      .select(col("vec_id"), col("m"), col("e"), col("nrm"),
-        element_at(col("centsByM"), col("m") + 1).as("ents"))
-      .select(col("vec_id"), col("m"), col("e"), col("nrm"),
-        transform(col("ents"),
-          c => struct(safeCos(dot(col("e"), c.getField("c_e")),
-            col("nrm"), c.getField("c_nrm")).as("sim"),
-            c.getField("c_id").as("cell"))).as("sims"))
-    withSims.select(col("vec_id"), col("m"), col("e"), col("nrm"),
-      aggregate(col("sims"),
-        struct(lit(Double.NegativeInfinity).as("sim"),
-          lit(Long.MaxValue).as("cell")),
-        (acc, x) => when(
-          x.getField("sim") > acc.getField("sim") ||
-            (x.getField("sim") === acc.getField("sim") &&
-              x.getField("cell") < acc.getField("cell")), x)
-          .otherwise(acc)).getField("cell").as("cell"),
-      aggregate(col("sims"), lit(Double.NegativeInfinity),
-        (acc, x) => greatest(acc, x.getField("sim"))).as("sim_best"))
-  }
-
-  /** Join an assignment frame to its centroid row on (m, cell) —
-    * broadcast hash join on both keys, no post-filter row blowup. */
-  private def joinCents(assigned: DataFrame, cents: DataFrame): DataFrame =
-    assigned.join(broadcast(cents.withColumnRenamed("m", "cm")),
-      col("m") === col("cm") && col("cell") === col("c_id"))
-
-  /** One Lloyd pass over ALL subspaces at once: reassign every
-    * subvector, then fixed-point-exact per-(m, cell, dim) means — ONE
-    * map-side-combined shuffle of ≤ M·K·(Dim/M) = K·Dim rows per
-    * partition for the whole codebook (the subspace axis rides the
-    * grouping key; no per-subspace passes). */
-  private def pqRefine(sub: DataFrame, packed: DataFrame): DataFrame =
-    pqAssign(sub, packed)
-      .select(col("m"), col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
-      .groupBy(col("m"), col("cell"), col("pos"))
-      .agg((sum(floor(col("v").cast("double") * 1e9).cast("long"))
-        / (count(lit(1)) * 1e9)).as("mv"))
-      .groupBy(col("m"), col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-      .select(col("m"), col("cell").as("c_id"),
-        transform(col("pm"), x => x.getField("mv").cast("float")).as("c_e"))
-      .withColumn("c_nrm", l2norm(col("c_e")))
-
-  /** Deterministic PQ codebooks: ONE seed sample of PqK vectors
-    * (smallest xxhash64 — a single TakeOrderedAndProject), sliced into
-    * every subspace, then `refineIters` all-subspace Lloyd passes.
-    * Returns centroid ROWS (m, c_id, c_e, c_nrm). */
-  def pqCodebooks(vecs: DataFrame, k: Int = PqK,
-      refineIters: Int = RefineIters, m: Int = PqM): DataFrame = {
-    val subWidth = Dim / m
-    // Lloyd passes run over the bounded hash-order sample (256·K
-    // vectors — [[trainingSample]]); consumers assign the FULL corpus
-    // against the trained codebook
-    // the sample is TakeOrderedAndProject output — ONE partition no
-    // matter the corpus layout — and every Lloyd pass's assignment
-    // (sample × M·K centroid array ops) would serialize on one core;
-    // spread restores compute parallelism on the FINE grids (measured
-    // r17: the m=32 faces' training pass was a 1.8-2.0 s single-task
-    // job; at the default m=4 the same pass is light and the extra
-    // exchange + 32-task scheduling REGRESSED emb_pq ~1.6x, so the
-    // floor applies from m >= 16 only)
-    val sampled = trainingSample(vecs, 256 * k).localCheckpoint(true)
-    val sub = pqSubvectors(
-      if (m >= 16) Tables.spread(sampled) else sampled, m)
-    val seed = vecs
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-      .select(col("vec_id").as("c_id"), col("embedding"),
-        explode(sequence(lit(0), lit(m - 1))).as("m"))
-      .select(col("m"), col("c_id"),
-        slice(col("embedding"), col("m") * subWidth + 1, lit(subWidth))
-          .as("c_e"))
-      .withColumn("c_nrm", l2norm(col("c_e")))
-    (0 until refineIters).foldLeft(seed) { (cents, _) =>
-      pqRefine(sub, pqPackByM(cents))
-    }
-  }
-
-  /** PQ assignment state: (centroid rows, per-(vector, subspace)
-    * assignment with optimality certificate), the assignment
-    * checkpointed — every consumer (codes, reconstruction, ADC)
-    * reads the materialized narrow frame instead of re-running the
-    * k-means pipeline. */
-  def pqAssignments(vecs: DataFrame, k: Int = PqK,
-      refineIters: Int = RefineIters,
-      m: Int = PqM): (DataFrame, DataFrame) = {
-    val cents = pqCodebooks(vecs, k, refineIters, m)
-      .localCheckpoint(true)
-    // full-corpus encode: M·K centroid array ops per vector —
-    // compute-bound, and single-task when the corpus frame rides a
-    // one-split scan or a checkpointed narrow lineage (profiled r17:
-    // 2.3-2.5 s on one task in knn_pq_adc/knn_ivfpq). Same m-gate as
-    // the training spread: at the default m=4 the encode is light and
-    // the exchange regresses the coarse-grid faces.
-    val assigned = pqAssign(
-      pqSubvectors(if (m >= 16) Tables.spread(vecs) else vecs, m),
-      pqPackByM(cents))
-      .localCheckpoint(true)
-    (cents, assigned)
-  }
-
   /** Correctness face for `emb_pq`: per vector, the code count, the
-    * in-plan argmax certificate (the assigned cell's independently
-    * recomputed similarity must reach the fold-max over its subspace
-    * codebook; degenerate zero-norm/NaN rows escape explicitly), and
-    * the vector's l2 norm recomposed FROM THE SUBSPACE DECOMPOSITION
-    * (‖x‖ = √Σ‖x_m‖²) — a numeric DuckDB recomputes independently from
-    * the raw embedding, so the emitted rows are tied to the actual
-    * vector data and to a correct slicing, not just to row existence.
-    * The codes themselves are k-means output — engine-specific by
-    * design, determinism and optimality are spec-tested. */
-  def pqCodesGate(vecs: DataFrame): DataFrame = {
-    val (cents, assigned) = pqAssignments(vecs)
-    val assignedSim = joinCents(assigned, cents)
-      .select(col("vec_id"), col("m"), col("cell"), col("nrm"),
-        col("sim_best"),
-        safeCos(dot(col("e"), col("c_e")), col("nrm"), col("c_nrm"))
-          .as("sim_assigned"))
-    assignedSim
-      .groupBy(col("vec_id"))
-      .agg(count(lit(1)).cast("int").as("n_codes"),
-        min(col("sim_assigned") >= col("sim_best") - lit(1e-12) ||
-          col("nrm") === 0 || isnan(col("sim_best"))).as("argmax_ok"),
-        round(sqrt(sum(col("nrm") * col("nrm"))), 4).as("nrm_r"))
+    * in-plan argmax certificate (the assigned centroid's cosine,
+    * recomputed here from the stored float centroid with plain `dot`,
+    * must reach the best cosine over the WHOLE subspace codebook — a
+    * `greatest` fold that shares no arithmetic with the kernel, so a
+    * kernel reporting a non-best slot fails it; degenerate
+    * zero-norm/NaN rows escape explicitly), and the vector's l2 norm
+    * recomposed FROM THE SUBSPACE DECOMPOSITION (‖x‖ = √Σ‖x_m‖²) — a
+    * numeric DuckDB recomputes independently from the raw embedding,
+    * so the emitted rows are tied to the actual vector data and to a
+    * correct slicing, not just to row existence. The codes themselves
+    * are k-means output — engine-specific by design, determinism and
+    * optimality are spec-tested. One projection per vector (M·K
+    * interpreted cosines for the bound): no corpus row is exploded or
+    * shuffled. */
+  def pqCodesGate(vecs: DataFrame): DataFrame = pqCodesGate(vecs, identity)
+
+  /** [[pqCodesGate]] certifying `slots(pq_assign(...))` instead of the
+    * kernel's own assignment — the seam a spec uses to show that a
+    * wrong slot fails the certificate. */
+  private[graft] def pqCodesGate(vecs: DataFrame,
+      slots: Column => Column): DataFrame = {
+    val book = kmeans(vecs, PqK, PqM, RefineIters).last
+    val w = Dim / PqM
+    val perSub = transform(slots(book.assign(col("embedding"))), (a, j) => {
+      val e = slice(col("embedding"), j * w + 1, lit(w))
+      val nrm = l2norm(e)
+      def cos(c: Column): Column = safeCos(dot(e, c), nrm, l2norm(c))
+      val best = aggregate(book.centroids(j), lit(Double.NegativeInfinity),
+        (acc, c) => greatest(acc, cos(c)))
+      struct(nrm.as("nrm"),
+        (cos(book.centroid(j, a.getField("slot"))) >= best - lit(1e-12) ||
+          nrm === 0 || isnan(best)).as("ok"))
+    })
+    vecs.select(col("vec_id"), perSub.as("s"))
+      .select(col("vec_id"), size(col("s")).as("n_codes"),
+        forall(col("s"), _.getField("ok")).as("argmax_ok"),
+        round(sqrt(aggregate(col("s"), lit(0.0),
+          (acc, x) => acc + x.getField("nrm") * x.getField("nrm"))), 4)
+          .as("nrm_r"))
       .orderBy(col("vec_id"))
   }
 
@@ -1097,32 +993,29 @@ object Similarity {
     * design — so they gate as booleans, not hashed floats, the
     * emb_pq discipline.
     *
-    * Scale: two assignment passes (seed + refined) over the subvector
-    * frame — each the broadcast-codebook argmax with NO corpus
-    * shuffle — then one map-side-combined M-row aggregate each. */
+    * Scale: ONE training run yields both codebooks (the seed is its
+    * first step); ONE corpus pass assigns every vector against both
+    * with `pq_assign` (no join, no corpus shuffle), then one
+    * map-side-combined M-row aggregate. */
   def pqDistortionAudit(vecs: DataFrame): DataFrame = {
-    val sub = pqSubvectors(vecs, PqM)
-    def stats(iters: Int): DataFrame = {
-      val cents = pqCodebooks(vecs, PqK, iters, PqM).localCheckpoint(true)
-      joinCents(pqAssign(sub, pqPackByM(cents)), cents)
-        .select(col("m"), col("e"),
-          coalesce(safeCos(dot(col("e"), col("c_e")),
-            col("nrm"), col("c_nrm")), lit(0.0)).as("sim"))
-        .groupBy(col("m"))
-        .agg(count(lit(1)).as("n_vecs"),
-          // per-ELEMENT fixed-point quantization before any fold (the
-          // emb_centroids discipline): a whole-subvector float dot
-          // crosses floor boundaries on 1-ulp engine differences
-          sum(aggregate(
-            transform(col("e"),
-              x => floor(x.cast("double") * 1e3).cast("long")),
-            lit(0L), (a, q) => a + q * q)).as("nrm2_fp"),
-          sum(floor(col("sim") * 1e9).cast("long")).as("sim_fp"),
-          max(abs(col("sim"))).as("max_abs"))
-    }
-    stats(RefineIters)
-      .join(stats(0).select(col("m").as("m0"),
-        col("sim_fp").as("sim_fp_seed")), col("m") === col("m0"))
+    val books = kmeans(vecs, PqK, PqM, RefineIters)
+    val w = Dim / PqM
+    val sims = zip_with(books.last.assign(col("embedding")),
+      books.head.assign(col("embedding")), (r, s) =>
+        struct(r.getField("sim").as("sim"), s.getField("sim").as("sim0")))
+    vecs.select(col("embedding"), posexplode(sims).as(Seq("m", "s")))
+      .groupBy(col("m"))
+      .agg(count(lit(1)).as("n_vecs"),
+        // per-ELEMENT fixed-point quantization before any fold (the
+        // emb_centroids discipline): a whole-subvector float dot
+        // crosses floor boundaries on 1-ulp engine differences
+        sum(aggregate(
+          transform(slice(col("embedding"), col("m") * w + 1, lit(w)),
+            x => floor(x.cast("double") * 1e3).cast("long")),
+          lit(0L), (a, q) => a + q * q)).as("nrm2_fp"),
+        sum(floor(col("s.sim") * 1e9).cast("long")).as("sim_fp"),
+        sum(floor(col("s.sim0") * 1e9).cast("long")).as("sim_fp_seed"),
+        max(abs(col("s.sim"))).as("max_abs"))
       .select(col("m").cast("long").as("m"), col("n_vecs"),
         col("nrm2_fp"),
         (col("sim_fp") >= col("sim_fp_seed")).as("improved_ok"),
@@ -1194,39 +1087,19 @@ object Similarity {
     math.max(200, 8 * math.ceil(math.sqrt(n.toDouble)).toInt)
 
   /** PQ index state: the slotted codebook (m, c_id, c_e, c_nrm, slot)
-    * and the packed, checkpointed code store (vec_id, codes). */
+    * and the packed code store (vec_id, codes) — one `pq_encode`
+    * projection over the corpus: byte j is the vector's slot in
+    * subspace j, the c_id rank (a Lloyd pass that empties a cell
+    * leaves K_j < K live slots; the scan kernel refuses any code past
+    * them). Codes are not materialized here: the encode is a map-only
+    * pass, and the caller decides whether to write, scan or pin it. */
   def pqIndex(vecs: DataFrame, k: Int = PqK, refineIters: Int = RefineIters,
       m: Int = PqM): (DataFrame, DataFrame) = {
-    val (cents, assigned) = pqAssignments(vecs, k, refineIters, m)
-    val book = pqBook(cents)
-    (book, pqPackCodes(book, assigned, k).localCheckpoint(true))
-  }
-
-  /** Dense per-subspace slots: a trained centroid's c_id is the vec_id
-    * of the seed vector it grew from, which no byte holds, so each
-    * subspace's centroids are ranked by c_id into slots 0..K_j−1. A
-    * Lloyd pass that empties a cell leaves K_j < K live slots; the
-    * scan kernel refuses any code past them. */
-  private def pqBook(cents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    cents.withColumn("slot", (row_number().over(
-      Window.partitionBy(col("m")).orderBy(col("c_id"))) - 1).cast("int"))
-  }
-
-  /** The pack step: per-(vector, subspace) assignments → one
-    * (vec_id, codes BINARY(M)) row per vector, byte j = the slot of the
-    * vector's subspace-j centroid. */
-  private def pqPackCodes(book: DataFrame, assigned: DataFrame,
-      k: Int): DataFrame = {
     require(k >= 1 && k <= 256,
       s"PQ codebooks of $k centroids do not fit one-byte codes (K ≤ 256)")
-    assigned
-      .join(broadcast(book.select(col("m").as("bm"), col("c_id"),
-        col("slot"))), col("m") === col("bm") && col("cell") === col("c_id"))
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("m"), col("slot")))).as("ms"))
-      .select(col("vec_id"), unhex(concat_ws("", transform(col("ms"),
-        x => lpad(hex(x.getField("slot")), 2, "0")))).as("codes"))
+    val book = kmeans(vecs, k, m, refineIters).last
+    (book.frame(vecs.sparkSession),
+      vecs.select(col("vec_id"), book.encode(col("embedding")).as("codes")))
   }
 
   /** Sequential double dot of a[ao, ao+n) and b[bo, bo+n) — DotProduct's
@@ -1288,6 +1161,7 @@ object Similarity {
 
   private val Longs = ArrayType(LongType, containsNull = false)
   private val Doubles = ArrayType(DoubleType, containsNull = false)
+  private val Floats = ArrayType(FloatType, containsNull = false)
   /** the [T][M][K] lookup-table / [M][K][w] codebook shape */
   private val Tables3 = ArrayType(ArrayType(Doubles, false), false)
 
@@ -1375,40 +1249,29 @@ object Similarity {
 
   /** Build the index state: slotted coarse cells (c_id, slot, c_e,
     * c_nrm), the slotted residual PQ codebook, and the packed
-    * (vec_id, ivf_cell, codes) store, ivf_cell = the cell's slot. All
-    * narrow and materialized. Broadcast budget: C·Dim + m·K·(Dim/m)
-    * floats, corpus-size-independent. The only corpus-sized shuffles
-    * are the Lloyd aggregations, the pack step and the codes⋈cells id
-    * join (narrow rows on both sides). */
+    * (vec_id, ivf_cell, codes) store, ivf_cell = the cell's slot. Both
+    * codebooks train on the driver over bounded samples ([[kmeans]]);
+    * the store is ONE projection over the corpus — `pq_assign` routes
+    * the vector to its cell, the float residual x − c(cell) is taken
+    * against the plan-literal cells, and `pq_encode` packs it. No
+    * corpus row is joined or shuffled; the plan literals hold
+    * C·Dim + m·K·(Dim/m) floats, corpus-size-independent. */
   def ivfPqIndex(vecs: DataFrame, centroidBudget: Int = CentroidBudget,
       m: Int = PqM,
       refineIters: Int = RefineIters): (DataFrame, DataFrame, DataFrame) = {
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
-      l2norm(col("embedding")).as("nrm"))
-    val cells = slotCells(
-      ivfCodebookRows(corpus, centroidBudget, refineIters))
-    val residuals = nearestCells(packCodebook(cells))(corpus, 1)
-      .join(broadcast(cells), col("cell") === col("c_id"))
-      .select(col("vec_id"), col("slot").as("ivf_cell"),
-        zip_with(col("e"), col("c_e"), (x, c) => x - c).as("embedding"))
-      .localCheckpoint(true)
-    val (book, packed) = pqIndex(residuals, refineIters = refineIters, m = m)
-    val codes = packed
-      .join(residuals.select(col("vec_id"), col("ivf_cell")), "vec_id")
-      .select(col("vec_id"), col("ivf_cell"), col("codes"))
-      .localCheckpoint(true)
-    (cells, book, codes)
-  }
-
-  /** The C trained coarse cells, collected once and rebuilt as a local
-    * frame with their dense slots (ascending c_id). */
-  private def slotCells(cells: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    val rows = cells.select(col("c_id"), col("c_e"), col("c_nrm")).collect()
-      .sortBy(_.getLong(0)).zipWithIndex
-      .map { case (r, i) => Row(r.getLong(0), r.get(1), r.getDouble(2), i) }
-    cells.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      cells.select("c_id", "c_e", "c_nrm").schema.add("slot", "int", false))
+    val spark = vecs.sparkSession
+    val cells = kmeans(vecs, centroidBudget, 1, refineIters).last
+    val residuals = vecs
+      .select(col("vec_id"), col("embedding"),
+        element_at(cells.assign(col("embedding")), 1).getField("slot")
+          .as("ivf_cell"))
+      .select(col("vec_id"), col("ivf_cell"),
+        zip_with(col("embedding"), cells.centroid(lit(0), col("ivf_cell")),
+          (x, c) => x - c).as("embedding"))
+    val book = kmeans(residuals, PqK, m, refineIters).last
+    (cells.frame(spark).drop("m"), book.frame(spark),
+      residuals.select(col("vec_id"), col("ivf_cell"),
+        book.encode(col("embedding")).as("codes")))
   }
 
   /** IVF-PQ serving query: scan the probed cells' codes, exact-cosine
@@ -1570,10 +1433,12 @@ object Similarity {
   private val CentsSchema =
     "m INT, c_id BIGINT, slot INT, c_e ARRAY<DOUBLE>, c_nrm DOUBLE"
 
+  /** Codebook frames are K·M-row local frames, which a write would
+    * split into default-parallelism slices: one file each. */
   private def writeCents(cents: DataFrame, path: String): Unit =
     cents.select(col("m"), col("c_id"), col("slot"),
         col("c_e").cast("array<double>").as("c_e"), col("c_nrm"))
-      .write.mode("overwrite").parquet(path)
+      .coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Index frames are read with the schema they were written with:
     * inferring it costs a footer-reading job per frame on every
@@ -1611,7 +1476,7 @@ object Similarity {
       ivfPqIndex(vecs, centroidBudget, m, refineIters)
     cells.select(col("c_id"), col("slot"),
       col("c_e").cast("array<double>").as("c_e"), col("c_nrm"))
-      .write.mode("overwrite").parquet(s"$path/cells")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/cells")
     writeCents(book, s"$path/pq_cents")
     codes.write.mode("overwrite").parquet(s"$path/codes")
     import vecs.sparkSession.implicits._
@@ -2146,7 +2011,9 @@ object Similarity {
     val cand = candidates.getOrElse(
       graft.sources.Knobs.optInt("knn.candidates")
         .getOrElse(autoAdcCandidates(n)))
-    val (cells, book, codes) = ivfPqIndex(vecs, m = 32, refineIters = 1)
+    val (cells, book, encoded) = ivfPqIndex(vecs, m = 32, refineIters = 1)
+    // every sweep point scans the same store: encode it once
+    val codes = encoded.localCheckpoint(true)
     // ground truth via the two-pass threshold top-k: bit-identical to
     // knnBrute, without the O(n·Q·log) rank sort (verdict r16 #5)
     val exact = knnBruteThreshold(vecs, pred, k)
@@ -2276,6 +2143,33 @@ object Similarity {
         array_sort(collect_list(struct(col("dim"), col("mean_v")))),
         s => s.getField("mean_v")).as("cvec"))
 
+  /** Per row, the label whose [[labelCentroidArrays]] centroid is
+    * nearest `embedding` (BIGINT): the `pq_assign` kernel at M = 1
+    * against the |labels| centroids as a plan literal in label order
+    * (NULL first) — cosine descending, then the smaller label; a zero
+    * norm scores -2.0 ([[safeCos]]). One driver collect of the bounded
+    * centroid set; the corpus pass is a map-only projection, no join.
+    * NULL over an empty corpus, which has no centroid. */
+  private def nearestLabel(vecs: DataFrame): Column = {
+    val cents = labelCentroidArrays(vecs)
+      .select(col("label").cast("long"), col("cvec")).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        r.getSeq[Double](1)))
+      .sortBy(_._1)
+    if (cents.isEmpty) lit(null).cast("long")
+    else element_at(
+      tableLit(cents.map(_._1.map(Long.box).orNull).toSeq,
+        ArrayType(LongType, containsNull = true)),
+      element_at(call_function("pq_assign", col("embedding"),
+        tableLit(Seq(cents.map(_._2).toSeq), Tables3)), 1)
+        .getField("slot") + 1)
+  }
+
+  /** (vec_id, e, nrm, cell): the corpus with its [[nearestLabel]] cell */
+  private def labelCells(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), col("embedding").as("e"),
+      l2norm(col("embedding")).as("nrm"), nearestLabel(vecs).as("cell"))
+
   /** IVF cell-purity audit — how semantically coherent each coarse
     * cell is (the quality signal behind nprobe tuning and cell-split
     * decisions: a cell mixing many labels forces wider probes for the
@@ -2286,30 +2180,13 @@ object Similarity {
     * mm_image_entropy discipline — exact integer, true entropy
     * recovers as ln N − ent/(N·10⁶)).
     *
-    * Scale: assignment is the broadcast-codebook argmax fold (corpus
-    * never shuffles for it), then ONE (cell, label) map-side-combined
-    * count and a cells-sized rollup — output ≤ C rows at any corpus
-    * size. */
+    * Scale: assignment is [[nearestLabel]]'s map-only projection
+    * (corpus never shuffles or joins for it), then ONE (cell, label)
+    * map-side-combined count and a cells-sized rollup — output ≤ C
+    * rows at any corpus size. */
   def cellPurity(vecs: DataFrame): DataFrame = {
-    val cents = labelCentroidArrays(vecs)
-      .select(col("label").cast("long").as("c_id"), col("cvec").as("c_e"),
-        l2norm(col("cvec")).as("c_nrm"))
-    val assigned = vecs
-      .select(col("vec_id"), col("label"), col("embedding").as("e"),
-        l2norm(col("embedding")).as("nrm"))
-      .crossJoin(packCodebook(cents))
-      .select(col("label"),
-        aggregate(transform(col("cents"), c =>
-          struct(safeCos(dot(col("e"), c.getField("c_e")), col("nrm"),
-            c.getField("c_nrm")).as("sim"),
-            c.getField("c_id").as("cell"))),
-          struct(lit(Double.NegativeInfinity).as("sim"),
-            lit(Long.MaxValue).as("cell")),
-          (acc, x) => when(x.getField("sim") > acc.getField("sim") ||
-            (x.getField("sim") === acc.getField("sim") &&
-              x.getField("cell") < acc.getField("cell")), x)
-            .otherwise(acc)).getField("cell").as("cell"))
-    assigned.groupBy(col("cell"), col("label"))
+    vecs.select(col("label"), nearestLabel(vecs).as("cell"))
+      .groupBy(col("cell"), col("label"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("cell"))
       .agg(sum(col("n")).as("n_vecs"),
@@ -2341,8 +2218,8 @@ object Similarity {
     * the embedding-space counterpart of LSH bucketing, with cluster
     * structure instead of random hyperplanes bounding the candidate
     * set. Pipeline: (1) assign every vector to its nearest centroid
-    * via the IVF per-row broadcast argmax (NO corpus shuffle — ties
-    * break to the lowest cell id, and the fixture's min top-2 gap is
+    * with [[nearestLabel]] (a map-only projection, NO corpus shuffle —
+    * ties break to the lowest cell id, and the fixture's min top-2 gap is
     * 1.1e-4, four orders above engine float drift); (2) one cell-keyed
     * self-join generates within-cell pairs — Σ|cell|² work, never
     * all-pairs (at production scale the cell count grows with n to
@@ -2359,13 +2236,7 @@ object Similarity {
     * ENTIRE pipeline — centroid, assignment, pair cosines, verdict —
     * is replayed relationally by the DuckDB oracle. */
   def semanticDedup(vecs: DataFrame, threshold: Double = 0.4): DataFrame = {
-    val cents = labelCentroidArrays(vecs)
-      .select(col("label").cast("long").as("c_id"), col("cvec").as("c_e"),
-        l2norm(col("cvec")).as("c_nrm"))
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
-      l2norm(col("embedding")).as("nrm"))
-    val cells = nearestCells(packCodebook(cents))(corpus, 1)
-      .localCheckpoint(true)
+    val cells = labelCells(vecs).localCheckpoint(true)
     val a = cells.select(col("cell"), col("vec_id").as("va"),
       col("e").as("ea"), col("nrm").as("na"))
     val b = cells.select(col("cell"), col("vec_id").as("vb"),
@@ -2388,7 +2259,7 @@ object Similarity {
     * builds the per-vector neighbor lists that seed graph clustering,
     * HNSW bottom layers, or connectivity analysis over an embedding
     * store). Same SemDeDup cell discipline as [[semanticDedup]]:
-    * fixed-point label centroids, broadcast argmax assignment (no
+    * fixed-point label centroids, [[nearestLabel]] assignment (no
     * corpus shuffle), ONE cell-keyed self-join bounds candidate volume
     * — then a vec-keyed WindowGroupLimit takes top-k. Cells that
     * outgrow `targetCell` members are SUB-SHARDED by a deterministic
@@ -2409,12 +2280,7 @@ object Similarity {
     val nLabels = math.max(1L,
       vecs.select(col("label")).distinct().count())
     val shards = math.max(1L, n / (nLabels * targetCell))
-    val cents = labelCentroidArrays(vecs)
-      .select(col("label").cast("long").as("c_id"), col("cvec").as("c_e"),
-        l2norm(col("cvec")).as("c_nrm"))
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
-      l2norm(col("embedding")).as("nrm"))
-    val cells = nearestCells(packCodebook(cents))(corpus, 1)
+    val cells = labelCells(vecs)
       .withColumn("sub",
         (col("vec_id") % 1000003L) * 2654435761L % shards)
       .localCheckpoint(true)
@@ -2858,7 +2724,8 @@ object Similarity {
     * Gaussian planes), integer-exact autoBitsPerBand (smallest b with
     * 32·2^b ≥ n), banding/bucket arithmetic, the (1, maxBucket]
     * bucket-size cut, a<b candidate pairs distinct across bands, and
-    * the unrounded cosine ≥ 0.4 verify. */
+    * the unrounded cosine ≥ 0.4 verify over DOUBLE[] embeddings (graft
+    * verifies in double; LIST_DOT_PRODUCT over FLOAT[] would not). */
   private lazy val lshBandedCtes: String =
     s"""planes AS (SELECT * FROM (VALUES
        |$planeLiterals) t(p, pl)),
@@ -2896,7 +2763,8 @@ object Similarity {
        |corpus AS (
        |  SELECT vec_id, embedding,
        |    SQRT(LIST_DOT_PRODUCT(embedding, embedding)) AS nrm
-       |  FROM embeddings),
+       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
+       |        FROM embeddings)),
        |vp AS (
        |  SELECT c.id_a AS a, c.id_b AS b,
        |    LIST_DOT_PRODUCT(ea.embedding, eb.embedding)
@@ -3244,17 +3112,22 @@ object Similarity {
         |FROM idx, fin ORDER BY dim""".stripMargin,
     // both retrieval legs replayed brute-force (full and 16-dim
     // prefix), same rank-tie contract as knn_brute, overlap counted
-    // identically; energy is the same float division rounded
+    // identically; energy is the same double division rounded. Every
+    // dot runs over DOUBLE[] (LIST_DOT_PRODUCT over FLOAT[] accumulates
+    // in single precision; graft computes in double)
     "emb_matryoshka" ->
-      """WITH corpus AS (
+      """WITH emb AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
+        |  FROM embeddings),
+        |corpus AS (
         |  SELECT vec_id, embedding,
         |    SQRT(LIST_DOT_PRODUCT(embedding, embedding)) AS nrm
-        |  FROM embeddings),
+        |  FROM emb),
         |tcorpus AS (
         |  SELECT vec_id, embedding[1:16] AS e16,
         |    SQRT(LIST_DOT_PRODUCT(embedding[1:16], embedding[1:16]))
         |      AS nrm
-        |  FROM embeddings),
+        |  FROM emb),
         |q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
         |      FROM corpus WHERE vec_id < 10),
         |tq AS (SELECT vec_id AS query_id, e16 AS qe, nrm AS qn
@@ -3282,11 +3155,9 @@ object Similarity {
         |  GROUP BY f.query_id)
         |SELECT c.vec_id AS query_id,
         |  CAST(COALESCE(ov.n, 0) AS BIGINT) AS n_overlap,
-        |  ROUND(CAST(LIST_DOT_PRODUCT(c.embedding[1:16],
-        |      c.embedding[1:16]) AS DOUBLE)
-        |    / CAST(LIST_DOT_PRODUCT(c.embedding, c.embedding)
-        |      AS DOUBLE), 4) AS energy_r
-        |FROM embeddings c LEFT JOIN ov ON c.vec_id = ov.query_id
+        |  ROUND(LIST_DOT_PRODUCT(c.embedding[1:16], c.embedding[1:16])
+        |    / LIST_DOT_PRODUCT(c.embedding, c.embedding), 4) AS energy_r
+        |FROM emb c LEFT JOIN ov ON c.vec_id = ov.query_id
         |WHERE c.vec_id < 10 ORDER BY query_id""".stripMargin,
     // double-cast dot (the hb precedent: DuckDB then accumulates the
     // same doubles Spark's native expression does, agreement ~1e-13 —
@@ -3361,8 +3232,8 @@ object Similarity {
         |  MIN(m) AS min_micro, MAX(m) AS max_micro
         |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
     // query-anchored bucket join replayed on the same banded CTEs
-    // (no bucket-size cut — mirrors the face), exact verify at 0.3,
-    // per-query count + (cos desc, id) argmax
+    // (no bucket-size cut — mirrors the face), exact verify at 0.3 in
+    // double precision, per-query count + (cos desc, id) argmax
     "knn_radius" ->
       s"""WITH $lshBandedCtes,
          |qb AS (
@@ -3376,7 +3247,8 @@ object Similarity {
          |corpus AS (
          |  SELECT vec_id, embedding,
          |    SQRT(LIST_DOT_PRODUCT(embedding, embedding)) AS nrm
-         |  FROM embeddings),
+         |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
+         |        FROM embeddings)),
          |verified AS (
          |  SELECT c.query_id, c.vec_id,
          |    LIST_DOT_PRODUCT(ec.embedding, eq.embedding)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import scala.concurrent.Await
+import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
@@ -22,36 +22,44 @@ object Probes {
     * checkpointed frame and the one-row aggregate result.
     *
     * Metric delivery runs through the (asynchronous) query-execution
-    * listener bus, so the result is awaited with a bounded timeout.
-    * Fallback: when the observed plan is statically pruned to an empty
-    * relation, AQE's empty-relation propagation ERASES the
-    * CollectMetrics node (verified Spark 4.1 — see the embeddingPairs
-    * guard comment) and the metrics never arrive; the same aggregates
-    * are then computed from the materialized checkpoint blocks — one
-    * extra cheap job on a degenerate input, never a wrong answer. The
-    * values are identical either way: deterministic aggregates of the
-    * materialized rows. */
+    * listener bus, so the result is awaited with a bounded timeout
+    * ([[awaitObserved]]). The values are identical either way:
+    * deterministic aggregates of the materialized rows. */
   def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
     require(aggs.nonEmpty, "checkpointObserved needs at least one aggregate")
     val obs = Observation()
     val ck = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true)
-    val row =
-      try Await.result(obs.future, 1500.millis)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          ck.agg(aggs.head, aggs.tail: _*).head()
-      }
-    (ck, row)
+    (ck, awaitObserved(ck, obs.future, 1500.millis, aggs))
   }
 
-  /** [[checkpointObserved]] through the fixpoint-loop stats reset
-    * ([[Loops.checkpointFresh]]' contract): the returned frame is a
-    * fresh leaf over the SAME materialized rows, so run-to-convergence
-    * loops keep bounded plan statistics AND their per-round
-    * convergence probe fused into the round's one materialization. */
-  def checkpointFreshObserved(df: DataFrame,
-      aggs: Column*): (DataFrame, Row) = {
-    val (ck, row) = checkpointObserved(df, aggs: _*)
-    (org.apache.spark.sql.classic.GraftStatsReset.freshLeaf(ck), row)
-  }
+  /** The observed row, or — when it has not arrived within `wait` —
+    * the same aggregates computed from the materialized checkpoint
+    * blocks: one extra cheap job, never a wrong answer. The metrics
+    * fail to arrive when the listener bus lags, or when an optimizer
+    * erases the CollectMetrics node; on Spark 4.1 no empty input
+    * erased it at the root of a checkpoint (empty LocalRelation, empty
+    * RDD, pruned filter, empty shuffle, join and aggregate were
+    * tried). Every fallback is logged at WARN and counted in
+    * [[fallbacks]], so it never passes silently. */
+  private[graft] def awaitObserved(ck: DataFrame, metrics: Future[Row],
+      wait: FiniteDuration, aggs: Seq[Column]): Row =
+    try Await.result(metrics, wait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        fallbackCount.incrementAndGet()
+        log.warn(s"observed checkpoint metrics did not arrive within " +
+          s"${wait.toMillis} ms; recomputing them from the checkpoint in " +
+          "an extra job")
+        ck.agg(aggs.head, aggs.tail: _*).head()
+    }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val fallbackCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** Timed-out observations [[checkpointObserved]] recomputed in this
+    * JVM — a process-local observability counter (the
+    * `Dedup.lastDroppedBuckets` pattern): 0 = every probe rode its
+    * checkpoint job. */
+  def fallbacks: Long = fallbackCount.get()
 }

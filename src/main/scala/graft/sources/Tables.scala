@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Star-schema loader for the driver-generated TPC-H-ish tables.
   *
@@ -25,7 +25,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     // Parquet TIMESTAMP(NANOS) is read as LongType under
     // spark.sql.legacy.parquet.nanosAsLong (Spark has no nanos
     // timestamp type); surface it as a microsecond TimestampType.
@@ -51,6 +52,43 @@ object Tables {
         }
     }
   }
+
+  /** The inferred schema of the parquet table at `path`, memoized by
+    * the path, its file listing (names, sizes, modification times) and
+    * the session's parquet reader settings: inference runs a
+    * footer-reading Spark job on every `spark.read.parquet`, and a
+    * driver-side listing is far cheaper. A rewritten table lists
+    * differently and is re-inferred. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path fails in the reader, with the reader's own error
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    // listStatus, not listFiles: a LocatedFileStatus loads each file's
+    // permissions, which the local file system does by running a shell
+    // command per file
+    def walk(q: org.apache.hadoop.fs.Path): Vector[(String, Long, Long)] =
+      fs.listStatus(q).toVector.flatMap(f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Vector((f.getPath.toString, f.getLen, f.getModificationTime)))
+    val listing = walk(p).sorted
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    schemas.synchronized {
+      schemas.get(path).filter(_._1 == (listing, conf)).map(_._2)
+    }.getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.synchronized { schemas(path) = ((listing, conf), inferred) }
+      inferred
+    }
+  }
+
+  private val schemas = scala.collection.mutable.HashMap
+    .empty[String, ((Vector[(String, Long, Long)], Map[String, String]),
+      StructType)]
 
   /** Register every table as a temp view so both the DataFrame API and
     * spark.sql can address them by name. */

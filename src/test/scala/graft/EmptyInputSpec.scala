@@ -118,4 +118,20 @@ class EmptyInputSpec extends GraftSpec {
     assert(e.getMessage.contains("empty"),
       s"error should name the empty input, got: ${e.getMessage}")
   }
+
+  test("checkpointObserved: metrics that never arrive fall back to the " +
+    "checkpoint, and the fallback is counted") {
+    val before = graft.plans.Probes.fallbacks
+    val ck = emptyDocs.select(col("doc_id")).localCheckpoint(true)
+    val row = graft.plans.Probes.awaitObserved(ck,
+      scala.concurrent.Promise[org.apache.spark.sql.Row]().future,
+      scala.concurrent.duration.Duration(1, "ms"), Seq(count(lit(1))))
+    assert(row.getLong(0) == 0L)
+    assert(graft.plans.Probes.fallbacks == before + 1,
+      "the fallback was not counted")
+    // the fused path over an empty corpus answers 0 either way
+    val (_, fused) = graft.plans.Probes.checkpointObserved(
+      emptyDocs.repartition(4), count(lit(1)).as("n"))
+    assert(fused.getLong(0) == 0L)
+  }
 }

@@ -1090,4 +1090,125 @@ class FunctionsSpec extends GraftSpec {
       col("id").desc)) == want)
     assert(topC(df.orderBy(rand(3))) == want)
   }
+
+  /** A 2-subspace codebook of 2-dim centroids for the encode kernels:
+    * subspace 0 has a zero centroid (slot 0) and two centroids at the
+    * same angle (slots 1 and 3, an exact cosine tie). */
+  private val encBook = Seq(
+    Seq(Seq(0.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(2.0, 0.0)),
+    Seq(Seq(1.0, 1.0), Seq(-1.0, 0.5)))
+
+  /** plain-Scala argmax: cosine DESC (NaN above every number, as Spark
+    * orders doubles), then the smaller slot; a zero norm scores -2.0 */
+  private def argmax(v: Seq[Double], book: Seq[Seq[Seq[Double]]])
+      : Seq[(Int, Double)] = {
+    def dotp(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    var off = 0
+    book.map { cs =>
+      val e = v.slice(off, off + cs.head.length)
+      off += cs.head.length
+      val vn = math.sqrt(dotp(e, e))
+      val sims = cs.map { c =>
+        val cn = math.sqrt(dotp(c, c))
+        if (vn == 0 || cn == 0) -2.0 else dotp(e, c) / (vn * cn)
+      }
+      def above(a: Double, b: Double) =
+        !(a == b || (a.isNaN && b.isNaN)) && java.lang.Double.compare(a, b) > 0
+      val best = sims.indices.foldLeft(0)((b, s) =>
+        if (above(sims(s), sims(b))) s else b)
+      best -> sims(best)
+    }
+  }
+
+  test("pq_encode / pq_assign equal a plain Scala argmax, zero-norm " +
+    "vectors, exact ties and NaN components included") {
+    val vs = Seq(
+      1L -> Seq(3.0f, 0.0f, 1.0f, 1.0f), // tie: slots 1 and 3
+      2L -> Seq(0.0f, 0.0f, 0.0f, 0.0f), // zero vector: all -2.0
+      3L -> Seq(-1.0f, 0.25f, -2.0f, 1.0f),
+      4L -> Seq(Float.NaN, 1.0f, 0.5f, -0.5f), // NaN cosines rank first
+      5L -> Seq(0.1f, 0.9f, 1e-30f, 0.0f))
+    val got = vs.toDF("id", "v")
+      .select(col("id"),
+        call_function("pq_encode", col("v"), typedlit(encBook)),
+        call_function("pq_assign", col("v"), typedlit(encBook)))
+      .collect().map(r => r.getLong(0) -> ((r.getAs[Array[Byte]](1).toSeq,
+        r.getSeq[org.apache.spark.sql.Row](2).map(a =>
+          (a.getInt(0), a.getDouble(1))))))
+      .toMap
+    vs.foreach { case (id, v) =>
+      val want = argmax(v.map(_.toDouble), encBook)
+      val (codes, assigned) = got(id)
+      assert(codes == want.map(_._1.toByte), s"vec $id codes")
+      assert(assigned.map(_._1) == want.map(_._1), s"vec $id slots")
+      assert(assigned.zip(want).forall { case ((_, a), (_, b)) =>
+        java.lang.Double.compare(a, b) == 0 }, s"vec $id sims")
+    }
+    assert(got(1L)._1.head == 1, "exact tie must keep the smaller slot")
+    assert(got(2L)._2.forall(_ == (0, -2.0)), "zero vector")
+    // NaN components: every nonzero centroid scores NaN, which Spark
+    // orders above -2.0 (the zero centroid), so the first of them wins
+    assert(got(4L)._2.head._1 == 1 && got(4L)._2.head._2.isNaN)
+    // a width mismatch is refused, not ranked on a partial slice
+    val e = intercept[Exception](Seq(1L -> Seq(1.0, 2.0)).toDF("id", "v")
+      .select(call_function("pq_encode", col("v"), typedlit(encBook)))
+      .collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("2-dim vector against a 4-dim PQ codebook")))
+  }
+
+  test("pq_encode refuses more than 256 slots and an empty subspace; " +
+    "pq_assign addresses any slot count") {
+    val v = Seq(Seq(1.0, 0.5)).toDF("v")
+    val wide = Seq((0 until 300).map(i => Seq(math.cos(i), math.sin(i))))
+    val tooWide = intercept[org.apache.spark.sql.AnalysisException](
+      v.select(call_function("pq_encode", col("v"), typedlit(wide))))
+    assert(tooWide.getMessage.contains("holds 300 centroids"))
+    val slot = v.select(call_function("pq_assign", col("v"), typedlit(wide))
+      .getItem(0).getField("slot")).head().getInt(0)
+    assert(slot == argmax(Seq(1.0, 0.5), wide).head._1 && slot > 0)
+    val empty = Seq(Seq(Seq(1.0)), Seq.empty[Seq[Double]])
+    Seq("pq_encode", "pq_assign", "pq_lloyd").foreach { f =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        v.select(call_function(f, col("v"), typedlit(empty))))
+      assert(e.getMessage.contains("subspace 1 of the PQ codebook is empty"),
+        s"$f: ${e.getMessage}")
+    }
+  }
+
+  test("pq_lloyd sums are exact and identical under 1, 4 and 32 " +
+    "partitions; a BIGINT overflow is refused") {
+    val vecs = (0L until 300L).map { id =>
+      id -> (0 until 4).map(d =>
+        ((id * 7919 + d * 104729) % 2001 - 1000) / 997.0f)
+    }
+    val book = Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(-1.0, -1.0)),
+      Seq(Seq(0.5, 0.5), Seq(-0.5, 1.0)))
+    // driver replay: per (subspace, slot) the count and Σ floor(x·1e9)
+    val want = book.map(_.map(c => Array.fill(1 + c.length)(0L)))
+    vecs.foreach { case (_, v) =>
+      argmax(v.map(_.toDouble), book).zipWithIndex.foreach {
+        case ((s, _), j) =>
+          val cell = want(j)(s)
+          cell(0) += 1
+          (0 until 2).foreach(i =>
+            cell(1 + i) += math.floor(v(2 * j + i).toDouble * 1e9).toLong)
+      }
+    }
+    val df = vecs.toDF("id", "v")
+    def lloyd(d: org.apache.spark.sql.DataFrame) =
+      d.agg(call_function("pq_lloyd", col("v"), typedlit(book)))
+        .head().getSeq[collection.Seq[collection.Seq[Long]]](0)
+        .map(_.map(_.toSeq))
+    val parts = Seq(1, 4, 32).map(n => lloyd(df.repartition(n)))
+    assert(parts.forall(_ == want.map(_.map(_.toSeq))))
+    // 1e9·1e9 per coordinate: ten members overflow a BIGINT sum
+    val big = (1L to 10L).map(_ -> Seq(1e9f, 1e9f)).toDF("id", "v")
+    val e = intercept[Exception](big.agg(call_function("pq_lloyd", col("v"),
+      typedlit(Seq(Seq(Seq(1.0, 1.0)))))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("overflows BIGINT")))
+  }
 }

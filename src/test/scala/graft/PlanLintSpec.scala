@@ -10,8 +10,9 @@ class PlanLintSpec extends GraftSpec {
     * query set / the fixed centroid budget) into a crossJoin by design
     * — the only intentional nested-loop joins in the library, with
     * their scale contract documented in Similarity.scala. (The PQ /
-    * IVF-PQ faces score packed codes with the adc_scan kernel against
-    * plan-literal lookup tables and join nothing nested-loop.) */
+    * IVF-PQ faces encode with pq_encode / pq_assign and score packed
+    * codes with adc_scan, all against plan-literal codebooks and
+    * lookup tables, and join nothing nested-loop.) */
   private val intentionalCross =
     Set("knn_brute", "knn_ivf", "knn_hamming",
       // broadcasts a 1-ROW packed source-count vector (the same
@@ -27,7 +28,6 @@ class PlanLintSpec extends GraftSpec {
       // #queries·k-sized rank tables hash-wise
       "hybrid_rrf",
       // embeds knn_brute (bounded query-set broadcast) as the exact
-      // leg and knnGraph's bounded-centroid cross as the approximate
       // leg; the audit joins two #queries·k rank tables
       "emb_recall_audit",
       // knn_brute's bounded query-set broadcast builds the candidate
@@ -48,13 +48,6 @@ class PlanLintSpec extends GraftSpec {
       // broadcasts the 1-ROW derived as-of watermark against the
       // (type, day) aggregate — the skew-audit totals shape
       "etl_freshness",
-      // two pqAssign passes, each crossing the corpus with the 1-ROW
-      // packed PQ codebook — the bounded-codebook shape of
-      // emb_cell_purity below
-      "emb_pq_distortion",
-      // the broadcast-codebook argmax assignment (1-ROW packed
-      // codebook cross) feeding the (cell, label) census
-      "emb_cell_purity",
       // broadcasts the language-margin (|langs| rows) and 1-row total
       // to rebuild the full sources×langs grid INCLUDING zero cells —
       // both sides dimension-sized at any corpus size

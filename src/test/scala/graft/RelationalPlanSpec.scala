@@ -96,4 +96,30 @@ class RelationalPlanSpec extends GraftSpec {
         s"$k returned 0 rows — vacuous oracle check")
     }
   }
+
+  test("Tables.load infers a table's schema once; a rewritten table is " +
+    "re-inferred") {
+    import java.nio.file.Files
+    import graft.sources.Tables
+    val tmp = Files.createTempDirectory("graft-load")
+    val dir = tmp.toString
+    try {
+      spark.range(5).selectExpr("id AS vec_id", "id * 2 AS v")
+        .write.parquet(s"$dir/t.parquet")
+      val (first, _) = jobsDuring(Tables.load(spark, dir, "t"))
+      val (second, jobs) = jobsDuring(Tables.load(spark, dir, "t"))
+      assert(jobs == 0, s"a repeated load of an unchanged table ran $jobs jobs")
+      assert(second.schema == first.schema &&
+        second.schema.fieldNames.toSeq == Seq("vec_id", "v"))
+      spark.range(3).selectExpr("id AS vec_id", "'x' AS s")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val rewritten = Tables.load(spark, dir, "t")
+      assert(rewritten.schema.fieldNames.toSeq == Seq("vec_id", "s"))
+      assert(rewritten.count() == 3)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      Files.walk(tmp).iterator().asScala.toSeq.reverse
+        .foreach(Files.deleteIfExists(_))
+    }
+  }
 }

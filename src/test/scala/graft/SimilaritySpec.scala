@@ -298,26 +298,28 @@ class SimilaritySpec extends GraftSpec {
     assert(a.length == 25, s"5 queries x k=5 expected, got ${a.length}")
   }
 
+  /** (vec_id, subspace, slot) of a packed code store */
+  private def unpack(codes: org.apache.spark.sql.DataFrame) =
+    codes.select("vec_id", "codes").collect().toSeq.flatMap { r =>
+      r.getAs[Array[Byte]](1).zipWithIndex.map { case (b, j) =>
+        (r.getLong(0), j, b & 0xff) }
+    }.sorted
+
   test("PQ assignment is deterministic, bounded and subspace-optimal") {
-    val (cents1, a1) = Similarity.pqAssignments(vecs)
-    val (_, a2) = Similarity.pqAssignments(vecs)
-    val codes1 = a1.select("vec_id", "m", "cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    val codes2 = a2.select("vec_id", "m", "cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    assert(codes1 == codes2, "PQ codes differ across runs")
-    // compression contract: every (m, cell) comes from its subspace's
+    val (book1, c1) = Similarity.pqIndex(vecs)
+    val (_, c2) = Similarity.pqIndex(vecs)
+    val codes1 = unpack(c1)
+    assert(codes1 == unpack(c2), "PQ codes differ across runs")
+    assert(codes1.size == vecs.count() * Similarity.PqM)
+    // compression contract: every (m, slot) comes from its subspace's
     // codebook — at most M·K distinct codes library-wide
-    val cb = cents1.collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSet
-    assert(cb.size <= Similarity.PqM * Similarity.PqK)
-    assert(codes1.map(c => (c._2, c._3)).toSet.subsetOf(cb),
-      "assignment used a cell absent from the codebook")
-    // per-subspace optimality vs a driver-side exact argmax
-    val centArr = cents1.collect().map { r =>
-      (r.getInt(0), r.getLong(1)) ->
-        r.getSeq[Float](2).map(_.toDouble).toArray
+    val centArr = book1.collect().map { r =>
+      (r.getInt(0), r.getInt(4)) -> r.getSeq[Float](2).map(_.toDouble).toArray
     }.toMap
+    assert(centArr.size <= Similarity.PqM * Similarity.PqK)
+    assert(codes1.map(c => (c._2, c._3)).toSet.subsetOf(centArr.keySet),
+      "assignment used a slot absent from the codebook")
+    // per-subspace optimality vs a driver-side exact argmax
     val sub = Similarity.Dim / Similarity.PqM
     val byVec = vecs.select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
@@ -327,14 +329,145 @@ class SimilaritySpec extends GraftSpec {
       d / (math.sqrt(a.map(x => x * x).sum) *
         math.sqrt(b.map(x => x * x).sum))
     }
-    codes1.take(200).foreach { case (vid, m, cell) =>
+    codes1.take(200).foreach { case (vid, m, slot) =>
       val e = byVec(vid).slice(m * sub, (m + 1) * sub)
-      val best = centArr.collect { case ((mm, cid), ce) if mm == m =>
-        cid -> cos(e, ce) }.toSeq.maxBy { case (cid, s) => (s, -cid.toDouble) }
-      val got = cos(e, centArr((m, cell)))
+      val best = centArr.collect { case ((mm, s), ce) if mm == m =>
+        s -> cos(e, ce) }.toSeq.maxBy { case (s, c) => (c, -s) }
+      val got = cos(e, centArr((m, slot)))
       assert(got >= best._2 - 1e-12,
         s"vec $vid subspace $m: assigned sim $got < best ${best._2}")
     }
+  }
+
+  /** The relational k-means + encode the kernels replaced: broadcast
+    * codebook crossJoin, folded argmax, posexplode + groupBy
+    * fixed-point means, slot = c_id rank. Kept here as the reference
+    * the native path must reproduce bit for bit. */
+  private object RelationalKmeans {
+    import org.apache.spark.sql.DataFrame
+    private def dot(a: org.apache.spark.sql.Column,
+        b: org.apache.spark.sql.Column) = call_function("dot_product", a, b)
+    private def safeCos(d: org.apache.spark.sql.Column,
+        na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
+      when(na === 0 || nb === 0, lit(-2.0)).otherwise(d / (na * nb))
+    private def hashOrder(df: DataFrame, n: Int) =
+      df.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(n)
+    private def subvectors(df: DataFrame, m: Int) = {
+      val w = Similarity.Dim / m
+      df.select(col("vec_id"), col("embedding"),
+          explode(sequence(lit(0), lit(m - 1))).as("m"))
+        .select(col("vec_id"), col("m"),
+          slice(col("embedding"), col("m") * w + 1, lit(w)).as("e"))
+        .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
+    }
+    /** (vec_id, m, e, cell = nearest c_id) */
+    def assign(sub: DataFrame, cents: DataFrame): DataFrame = {
+      val packed = broadcast(cents.groupBy(col("m").as("cm"))
+        .agg(collect_list(struct(col("c_id"), col("c_e"), col("c_nrm")))
+          .as("ents")))
+      sub.join(packed, col("m") === col("cm"))
+        .select(col("vec_id"), col("m"), col("e"),
+          aggregate(transform(col("ents"), c => struct(
+              safeCos(dot(col("e"), c.getField("c_e")), col("nrm"),
+                c.getField("c_nrm")).as("sim"), c.getField("c_id").as("cell"))),
+            struct(lit(Double.NegativeInfinity).as("sim"),
+              lit(Long.MaxValue).as("cell")),
+            (acc, x) => when(x.getField("sim") > acc.getField("sim") ||
+              (x.getField("sim") === acc.getField("sim") &&
+                x.getField("cell") < acc.getField("cell")), x)
+              .otherwise(acc)).getField("cell").as("cell"))
+    }
+    /** centroid rows (m, c_id, c_e, c_nrm) after `iters` Lloyd passes */
+    def train(df: DataFrame, k: Int, m: Int, iters: Int): DataFrame = {
+      val sub = subvectors(hashOrder(df, 256 * k), m).localCheckpoint(true)
+      val seed = subvectors(hashOrder(df, k), m)
+        .select(col("m"), col("vec_id").as("c_id"), col("e").as("c_e"),
+          col("nrm").as("c_nrm"))
+      (0 until iters).foldLeft(seed) { (cents, _) =>
+        assign(sub, cents.localCheckpoint(true))
+          .select(col("m"), col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
+          .groupBy(col("m"), col("cell"), col("pos"))
+          .agg((sum(floor(col("v").cast("double") * 1e9).cast("long"))
+            / (count(lit(1)) * 1e9)).as("mv"))
+          .groupBy(col("m"), col("cell"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
+          .select(col("m"), col("cell").as("c_id"),
+            transform(col("pm"), x => x.getField("mv").cast("float")).as("c_e"))
+          .withColumn("c_nrm", sqrt(dot(col("c_e"), col("c_e"))))
+      }
+    }
+    /** (vec_id, subspace, slot) with slot = the cell's c_id rank */
+    def codes(df: DataFrame, cents: DataFrame, m: Int) = {
+      val slots: Map[(Int, Long), Int] = cents.select("m", "c_id").collect()
+        .map(r => (r.getInt(0), r.getLong(1))).groupBy(_._1).toSeq
+        .flatMap { case (j, cs) => cs.map(_._2).sorted.zipWithIndex.toSeq
+          .map { case (c, s) => (j, c) -> s } }.toMap
+      assign(subvectors(df, m), cents).select("vec_id", "m", "cell").collect()
+        .map(r => (r.getLong(0), r.getInt(1), slots((r.getInt(1), r.getLong(2)))))
+        .toSeq.sorted
+    }
+    def rows(cents: DataFrame) = cents.select("m", "c_id", "c_e").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Float](2).toSeq))
+      .toSeq.sortBy(r => (r._1, r._2))
+  }
+
+  test("native k-means: PQ and IVF-PQ codebooks and codes equal the " +
+    "relational Lloyd pass they replaced") {
+    import RelationalKmeans._
+    for ((m, iters) <- Seq((Similarity.PqM, Similarity.RefineIters), (32, 1))) {
+      val (book, codes) = Similarity.pqIndex(vecs, refineIters = iters, m = m)
+      val cents = train(vecs, Similarity.PqK, m, iters)
+      assert(rows(book) == rows(cents), s"PQ m=$m codebook")
+      assert(unpack(codes) == RelationalKmeans.codes(vecs, cents, m),
+        s"PQ m=$m codes")
+    }
+    val (cells, book, codes) = Similarity.ivfPqIndex(vecs, m = 32,
+      refineIters = 1)
+    val relCells = train(vecs, Similarity.CentroidBudget, 1, 1)
+    assert(rows(cells.withColumn("m", lit(0))) == rows(relCells))
+    val residuals = assign(vecs.select(col("vec_id"), lit(0).as("m"),
+        col("embedding").as("e"),
+        sqrt(call_function("dot_product", col("embedding"), col("embedding")))
+          .as("nrm")), relCells)
+      .join(cells.select(col("c_id").as("cell"), col("c_e"), col("slot")), "cell")
+      .select(col("vec_id"), col("slot"),
+        zip_with(col("e"), col("c_e"), (x, c) => x - c).as("embedding"))
+    val relBook = train(residuals, Similarity.PqK, 32, 1)
+    assert(rows(book) == rows(relBook), "IVF-PQ residual codebook")
+    assert(unpack(codes) == RelationalKmeans.codes(residuals, relBook, 32),
+      "IVF-PQ codes")
+    assert(codes.select("vec_id", "ivf_cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).sorted.toSeq ==
+      residuals.select("vec_id", "slot").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).sorted.toSeq, "IVF cells")
+  }
+
+  test("index builds run a bounded number of Spark jobs") {
+    val root = Similarity.indexRoot + "/spec_jobs"
+    val (_, pqJobs) = jobsDuring(Similarity.buildPqIndex(vecs, s"$root/pq"))
+    val (_, ivfJobs) = jobsDuring(
+      Similarity.buildIvfPqIndex(vecs, s"$root/ivfpq"))
+    // count, sample, seed, one Lloyd pass, then the writes
+    assert(pqJobs <= 10, s"PQ build ran $pqJobs jobs")
+    assert(ivfJobs <= 16, s"IVF-PQ build ran $ivfJobs jobs")
+  }
+
+  test("emb_pq's argmax certificate fails a kernel that reports a " +
+    "non-best slot") {
+    val honest = Similarity.pqCodesGate(vecs).collect()
+    assert(honest.nonEmpty && honest.forall(_.getBoolean(2)))
+    // every subspace's slot swapped for another live one (0 <-> 1), its
+    // similarity reported as the floor -2.0: a certificate that trusted
+    // the kernel's own similarity would pass every row, so only the
+    // independently folded bound over the whole codebook can catch it
+    val swapped = Similarity.pqCodesGate(vecs, a => transform(a, s =>
+        struct(when(s.getField("slot") === 0, 1).otherwise(0).as("slot"),
+          lit(-2.0).as("sim"))))
+      .collect()
+    val failed = swapped.count(!_.getBoolean(2))
+    assert(swapped.length == honest.length &&
+      failed > swapped.length / 2,
+      s"only $failed of ${swapped.length} rows failed the certificate")
   }
 
   test("zero-norm vectors get deterministic assignments instead of " +
@@ -582,7 +715,8 @@ class SimilaritySpec extends GraftSpec {
   test("PQ / IVF-PQ keys and emb_recall_audit give identical rows under " +
     "1, 4 and 32 shuffle partitions with AQE on and off") {
     val keys = Seq("knn_pq_adc", "knn_ivfpq", "knn_pq_serve",
-      "knn_ivfpq_serve", "emb_recall_audit")
+      "knn_ivfpq_serve", "emb_recall_audit", "emb_pq", "emb_pq_distortion",
+      "knn_ivf")
     val confs = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.enabled")
     val saved = confs.map(c => c -> spark.conf.get(c))
