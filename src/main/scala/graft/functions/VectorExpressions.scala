@@ -648,12 +648,14 @@ case class PqDecode(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** A foldable [M][K_j][w_j] PQ codebook — subspace j's centroids in
-  * slot order — parsed once per expression instance for the encode
-  * kernels ([[PqEncode]], [[PqAssign]], [[PqLloyd]]), with every
-  * centroid's norm. A vector's subspace j is its slice
+/** A [M][K_j][w_j] PQ codebook — subspace j's centroids in slot
+  * order — with every centroid's norm: parsed once per expression
+  * instance from the foldable codebook of the encode kernels
+  * ([[PqEncode]], [[PqAssign]], [[PqLloyd]]), and built on the driver
+  * from the IVF cells, whose [[probe]] lists are the query side of the
+  * same order. A vector's subspace j is its slice
   * [Σ_{i<j} w_i, Σ_{i≤j} w_i). */
-private[functions] final class PqCodebook(val cents: Array[Array[Array[Double]]]) {
+private[graft] final class PqCodebook(val cents: Array[Array[Array[Double]]]) {
   val m: Int = cents.length
   val widths: Array[Int] = cents.map(cs => if (cs.isEmpty) 0 else cs(0).length)
   val offsets: Array[Int] = widths.scanLeft(0)(_ + _)
@@ -676,46 +678,77 @@ private[functions] final class PqCodebook(val cents: Array[Array[Array[Double]]]
           s"addresses at most $maxSlots (K ≤ $maxSlots)"
     }
 
+  /** The order every nearest-centroid choice uses: (a, slot sa) ranks
+    * before (b, slot sb) when cosine a is greater as Spark orders
+    * doubles (NaN above every number, -0.0 = 0.0), then on the smaller
+    * slot. */
+  private def before(a: Double, sa: Int, b: Double, sb: Int): Boolean = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+    c > 0 || c == 0 && sa < sb
+  }
+
+  /** The norm of x's subspace-j slice. */
+  private def sliceNorm(x: Array[Double], j: Int): Double = {
+    var nv = 0.0
+    var i = offsets(j)
+    while (i < offsets(j + 1)) { nv += x(i) * x(i); i += 1 }
+    math.sqrt(nv)
+  }
+
+  /** The cosine of x's subspace-j slice (norm vn) with the centroid at
+    * slot s. A zero-norm side scores -2.0 (Similarity.safeCos). Dots
+    * and norms are DotProduct's sequential double loops, so the result
+    * equals the relational cosine bit for bit. */
+  private def cosine(x: Array[Double], vn: Double, j: Int, s: Int): Double = {
+    val (c, cn) = (cents(j)(s), nrm(j)(s))
+    if (vn == 0 || cn == 0) -2.0
+    else {
+      val off = offsets(j)
+      var d = 0.0
+      var i = 0
+      while (i < c.length) { d += x(off + i) * c(i); i += 1 }
+      d / (vn * cn)
+    }
+  }
+
+  private def requireWidth(n: Int): Unit =
+    if (n != dim) throw new IllegalStateException(
+      s"$n-dim vector against a $dim-dim PQ codebook")
+
   /** Per subspace j, the slot of the centroid nearest v's slice and its
-    * cosine, written to slots(j) / sims(j). Order: cosine descending as
-    * Spark orders doubles (NaN above every number, -0.0 = 0.0), then
-    * the smaller slot. A zero-norm side scores -2.0 (Similarity.safeCos).
-    * Dots and norms are DotProduct's sequential double loops, so the
-    * result equals the relational argmax bit for bit. A vector whose
-    * width is not the codebook's is refused. */
+    * cosine, written to slots(j) / sims(j), in the [[before]] order. A
+    * vector whose width is not the codebook's is refused. */
   def assign(v: ArrayData, f: Boolean, slots: Array[Int],
       sims: Array[Double]): Unit = {
-    if (v.numElements() != dim) throw new IllegalStateException(
-      s"${v.numElements()}-dim vector against a $dim-dim PQ codebook")
+    requireWidth(v.numElements())
     val x = Array.tabulate(dim)(VectorInput.get(v, _, f))
     var j = 0
     while (j < m) {
-      val (off, w, cs) = (offsets(j), widths(j), cents(j))
-      var nv = 0.0
-      var i = 0
-      while (i < w) { nv += x(off + i) * x(off + i); i += 1 }
-      val vn = math.sqrt(nv)
+      val vn = sliceNorm(x, j)
       var best = 0
       var bestSim = 0.0
       var s = 0
-      while (s < cs.length) {
-        val (c, cn) = (cs(s), nrm(j)(s))
-        val sim =
-          if (vn == 0 || cn == 0) -2.0
-          else {
-            var d = 0.0
-            i = 0
-            while (i < w) { d += x(off + i) * c(i); i += 1 }
-            d / (vn * cn)
-          }
-        if (s == 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(sim, bestSim) > 0) { best = s; bestSim = sim }
+      while (s < cents(j).length) {
+        val sim = cosine(x, vn, j, s)
+        if (s == 0 || before(sim, s, bestSim, best)) { best = s; bestSim = sim }
         s += 1
       }
       slots(j) = best
       sims(j) = bestSim
       j += 1
     }
+  }
+
+  /** An IVF query's probe list: the `n` slots of a one-subspace
+    * codebook (the coarse cells) nearest x, nearest first, in the
+    * [[before]] order — so its head is the slot [[assign]] picks. */
+  def probe(x: Array[Double], n: Int): Array[Int] = {
+    require(m == 1, s"probe lists need a one-subspace codebook, got M = $m")
+    requireWidth(x.length)
+    val vn = sliceNorm(x, 0)
+    val sims = Array.tabulate(cents(0).length)(cosine(x, vn, 0, _))
+    sims.indices.sortWith((a, b) => before(sims(a), a, sims(b), b))
+      .take(n).toArray
   }
 }
 

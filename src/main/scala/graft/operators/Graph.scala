@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Loops
 import graft.sources.{Knobs, Tables}
 
 /** Iterative graph analytics over relationship graphs derived from the
@@ -301,88 +300,21 @@ object Graph {
   /** Connected components to the TRUE fixpoint (every node labeled
     * with the minimum node id reachable from it) — the grouping
     * primitive behind near-dup cluster consolidation, entity
-    * resolution, and link-farm detection in corpus curation. Each
-    * round does one min-label propagation (edge-keyed join + map-side-
-    * combined min-groupBy, the bfsHops template) FOLLOWED by a pointer
-    * jump (comp ← comp(comp), a label-table self-join), which is what
-    * turns worst-case-diameter rounds into O(log d) — the same
-    * shortcutting idea as large-star/small-star (Kiveris et al. 2014,
-    * "Connected Components in MapReduce and Beyond"), kept in its
-    * simplest exchange-bounded form. Convergence is DETECTED, not
-    * assumed: the loop stops when a round changes zero labels, so the
-    * output is the fixpoint the oracle's recursive CTE computes —
-    * independent of round count, data scale, or partition layout.
-    *
-    * Scale shape: every step is keyed on node ids (edges persisted/
-    * bucketed by src at scale co-partition with the node-sized label
-    * table); the label table is localCheckpoint'ed per round — the
-    * single-JVM stand-in for a checkpointed label table that caps
-    * lineage across a convergence loop. The change-count action per
-    * round is one node-sized aggregate, the standard price of a
-    * data-dependent fixpoint. */
+    * resolution, and link-farm detection in corpus curation. Runs the
+    * alternating large-star/small-star resolver (Kiveris et al. 2014,
+    * "Connected Components in MapReduce and Beyond";
+    * Dedup.resolveClusters): 3 node-keyed shuffles per round, a
+    * window-min formulation with no self-joins, one checkpoint per
+    * round, O(log n) rounds — the bound DedupSpec pins on a 64-node
+    * path. Convergence is DETECTED, not assumed, so the output is the
+    * fixpoint the oracle's recursive CTE computes — independent of
+    * round count, data scale, or partition layout. */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50)
       : DataFrame =
-    // r17: the registered face delegates to the alternating
-    // large-star/small-star machinery (Dedup.resolveClusters — 3
-    // shuffles per round, window-min formulation, no self-joins, the
-    // same O(log n) convergence contract DedupSpec pins on a path) —
-    // measured 3.0 → 2.9 s at sf0.1 over the min-label+pointer-jump
-    // loop below, with one checkpoint per round instead of two and no
-    // per-round change-count job. Both compute the identical fixpoint
-    // (min reachable node id; the oracle's recursive CTE is the
-    // definition) — the propagation loop stays as the counted
-    // reference implementation whose round-count and fresh-stats
-    // contracts GraphSpec pins.
     Dedup.resolveClusters(
       edges.select(col("a").as("doc_a"), col("b").as("doc_b")), maxRounds)
       .select(col("doc_id").as("node"), col("keep_id").as("comp"))
       .orderBy(col("node"))
-
-  /** [[connectedComponents]] plus the number of rounds to the detected
-    * fixpoint — the O(log n) convergence contract is itself under test
-    * (GraphSpec pins ≤ log₂(n)+3 rounds on a path, the worst diameter
-    * per node count). Round count is what drives the CC term in
-    * dedup_embedding's measured growth exponent (BASELINE.md sf3
-    * section): per-round work is linear, rounds grow with log of the
-    * largest cluster's diameter. */
-  def connectedComponentsCounted(edges: DataFrame, maxRounds: Int = 50)
-      : (DataFrame, Int) = {
-    // run-to-convergence loop → checkpointFresh, NOT localCheckpoint:
-    // plain checkpoints inherit origin-plan stats, and this loop's
-    // self-join squares them every round — bit-length doubles per
-    // iteration until planning time explodes and the driver throws
-    // `BigInteger would overflow supported range` (hit at the sf3
-    // scale point, where convergence first needed enough rounds;
-    // graft.plans.Loops has the full mechanism)
-    val e = Loops.checkpointFresh(
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(edges.select(col("b").as("src"), col("a").as("dst"))))
-    var labels = Loops.checkpointFresh(
-      e.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("comp")))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      rounds += 1
-      // min over own label and every neighbor's label
-      val prop = Loops.checkpointFresh(
-        e.join(labels, e("src") === labels("node"))
-          .select(col("dst").as("node"), col("comp"))
-          .unionAll(labels)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp")))
-      // pointer jump: comp ← comp(comp); every comp value is itself a
-      // node id, so the self-join is total
-      val next = Loops.checkpointFresh(prop
-        .join(prop.select(col("node").as("jn"), col("comp").as("jc")),
-          col("comp") === col("jn"))
-        .select(col("node"), col("jc").as("comp")))
-      changed = next
-        .join(labels.select(col("node"), col("comp").as("prev")), "node")
-        .filter(col("comp") =!= col("prev")).count()
-      labels = next
-    }
-    (labels.orderBy(col("node")), rounds)
-  }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for
     * community detection over an undirected edge list — the cheap
@@ -685,7 +617,7 @@ object Graph {
         |FROM deg GROUP BY bucket ORDER BY bucket""".stripMargin,
     // the DEFINITION, not the algorithm: min reachable node id by
     // recursive closure — hash equality proves the engine's
-    // pointer-jumping loop converged to the exact fixpoint
+    // star-round resolver converged to the exact fixpoint
     // the same three peels unrolled: cut / induce / recount per round,
     // COUNT stays BIGINT, removal-round and final-degree COALESCEd
     "graph_kcore" ->

@@ -6,15 +6,16 @@ package graft
   * later edit introduces elsewhere. */
 class PlanLintSpec extends GraftSpec {
 
-  /** knn_brute / knn_ivf / knn_hamming broadcast a BOUNDED set (the
-    * query set / the fixed centroid budget) into a crossJoin by design
-    * — the only intentional nested-loop joins in the library, with
-    * their scale contract documented in Similarity.scala. (The PQ /
-    * IVF-PQ faces encode with pq_encode / pq_assign and score packed
-    * codes with adc_scan, all against plan-literal codebooks and
-    * lookup tables, and join nothing nested-loop.) */
+  /** knn_brute / knn_hamming broadcast a BOUNDED query set into a
+    * crossJoin by design — the only intentional nested-loop joins in
+    * the library, with their scale contract documented in
+    * Similarity.scala. (knn_ivf and the PQ / IVF-PQ faces assign and
+    * encode with pq_assign / pq_encode, probe through plan-literal
+    * query lists and score packed codes with adc_scan, all against
+    * plan-literal codebooks and lookup tables, and join nothing
+    * nested-loop.) */
   private val intentionalCross =
-    Set("knn_brute", "knn_ivf", "knn_hamming",
+    Set("knn_brute", "knn_hamming",
       // broadcasts a 1-ROW packed source-count vector (the same
       // bounded-codebook shape as the ANN cell assignment); see
       // Sampling.interleave's scale note

@@ -61,6 +61,88 @@ class SimilaritySpec extends GraftSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning(vec_id"),
       s"corpus-side shuffle in IVF assignment:\n${plan.take(1500)}")
+    // probing reads the queries of a vector's cell from a plan literal:
+    // no shuffle keyed by cell, no nested-loop probe join
+    assert(!plan.contains("hashpartitioning(cell") &&
+      !plan.contains("BroadcastNestedLoopJoin"),
+      s"cell-keyed shuffle or probe join in IVF kNN:\n${plan.take(1500)}")
+  }
+
+  /** IVF cells (a c_id, slot, c_e frame) as their one-subspace
+    * codebook, slot order */
+  private def ivfCells(frame: org.apache.spark.sql.DataFrame) =
+    new graft.functions.PqCodebook(Array(frame.select("slot", "c_e")
+      .collect().map(r => r.getInt(0) ->
+        r.getSeq[Float](1).map(_.toDouble).toArray)
+      .sortBy(_._1).map(_._2)))
+
+  test("IVF probe lists: the head is pq_assign's slot and the list is " +
+    "the plain (cosine DESC in Spark's order, slot) sort — fixture " +
+    "vectors, a zero vector and an exact two-cell tie") {
+    val trained = ivfCells(Similarity.ivfPqIndex(vecs)._1).cents(0)
+    // cells 3 and 7 identical: a vector at that centroid ties exactly
+    val tied = trained.updated(7, trained(3))
+    def norm(a: Array[Double]) = math.sqrt(a.map(v => v * v).sum)
+    def cos(x: Array[Double], c: Array[Double]): Double =
+      if (norm(x) == 0 || norm(c) == 0) -2.0
+      else x.indices.map(i => x(i) * c(i)).sum / (norm(x) * norm(c))
+    // Spark's double order: NaN above every number, -0.0 = 0.0
+    val order = Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse,
+      Ordering.Int)
+    def probes(book: Array[Array[Double]],
+        vs: Seq[Array[Double]]): Seq[Seq[Int]] = {
+      val kernel = new graft.functions.PqCodebook(Array(book))
+      import spark.implicits._
+      val heads = vs.map(_.toSeq).toDF("v")
+        .select(element_at(call_function("pq_assign", col("v"),
+          typedlit(Seq(book.map(_.toSeq).toSeq))), 1).getField("slot"))
+        .collect().map(_.getInt(0))
+      vs.zip(heads).map { case (v, head) =>
+        val got = kernel.probe(v, book.length).toSeq
+        val want = book.indices.sortBy { c =>
+          val x = cos(v, book(c)); (if (x == 0.0) 0.0 else x, c)
+        }(order)
+        assert(got == want, s"probe list $got != plain sort $want")
+        assert(got.head == head, s"probe head ${got.head} != pq_assign $head")
+        assert(kernel.probe(v, 2).toSeq == want.take(2))
+        got
+      }
+    }
+    probes(trained, vecs.select("embedding").collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq)
+    assert(probes(trained, Seq(Array.fill(Similarity.Dim)(0.0))).head ==
+      trained.indices, "a zero vector probes every cell in slot order")
+    assert(probes(tied, Seq(tied(3))).head.take(2) == Seq(3, 7),
+      "an exact tie keeps the smaller slot first")
+  }
+
+  test("knnIvf and knnIvfPq probe identical cells for the same nprobe") {
+    val (cellsFrame, _, codes) = Similarity.ivfPqIndex(vecs)
+    val cells = ivfCells(cellsFrame)
+    val cellOf = codes.select("vec_id", "ivf_cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val qv = vecs.filter(col("vec_id") < 5).select("vec_id", "embedding")
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[Float](1).map(_.toDouble).toArray).toMap
+    val n = cellOf.size
+    for (p <- Seq(1, 3)) {
+      // every neighbor ranked (k = n, C = n): the cells an answer
+      // reaches are exactly the cells its query probed
+      def reached(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) =>
+          q -> rs.map(r => cellOf(r.getLong(1))).toSet }
+      val ivf = reached(Similarity.knnIvf(vecs, col("vec_id") < 5, k = n,
+        nprobe = p))
+      val ivfpq = reached(Similarity.knnIvfPq(vecs, col("vec_id") < 5,
+        k = n, nprobe = p, candidates = n))
+      qv.foreach { case (q, v) =>
+        val probed = cells.probe(v, p).toSet
+          .filter(c => cellOf.exists { case (id, cc) => cc == c && id != q })
+        assert(ivf(q) == probed && ivfpq(q) == probed,
+          s"nprobe=$p query $q: knnIvf ${ivf(q)}, knnIvfPq ${ivfpq(q)}, " +
+            s"probe list $probed")
+      }
+    }
   }
 
   test("int8 quantization respects the 0.5/scale reconstruction bound") {
