@@ -26,7 +26,7 @@ object GraftSession {
       // graft.functions.GraftExtensions
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // the whole-stage-codegen class cache defaults to 100 entries;
-      // the registry holds 110 queries, so a pass over all of them
+      // the registry holds 235 queries, so a pass over all of them
       // evicts every compiled plan and each re-execution pays a
       // ~0.2-0.3 s recompile (surfaced by the interleaved bench —
       // cheap keys read 2-3x their back-to-back timings). Size it to

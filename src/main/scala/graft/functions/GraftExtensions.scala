@@ -36,11 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "outer_upper(v) - upper-triangle outer product of v (row-major) with v appended"),
       (children: Seq[Expression]) => OuterUpper(children(0))))
     ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(shingles) - 64-element MinHash signature of array<string>"),
-      (children: Seq[Expression]) => MinHashSignature(children.head)))
-    ext.injectFunction((
       FunctionIdentifier("ascii_normalize"),
       info("ascii_normalize",
         "ascii_normalize(s) - strip to [A-Za-z0-9 ], squeeze space " +
@@ -242,15 +237,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"${Option(other).getOrElse("NULL")} (${e.dataType.catalogString})")
       }
     }
-    ext.injectFunction((
-      FunctionIdentifier("rolling_fingerprint"),
-      info("rolling_fingerprint",
-        "rolling_fingerprint(text, k, w) - winnowed Rabin-Karp k-gram fingerprint"),
-      (children: Seq[Expression]) => {
-        expectArity("rolling_fingerprint(text, k, w)", 3, children)
-        RollingHashFingerprint(children.head,
-          intArg(children(1), "k"), intArg(children(2), "w"))
-      }))
     ext.injectFunction((
       FunctionIdentifier("poly_fingerprint"),
       info("poly_fingerprint",

@@ -32,63 +32,11 @@ private[functions] trait StringArrayInput { self: UnaryExpression =>
   }
 }
 
-/** Native MinHash signature over a shingle set (SURVEY §4's
-  * MinHashSignature). One strong hash per shingle + NumHashes affine
-  * permutations (a·h + b, odd a): ~n·64 multiply-adds per row in a
-  * primitive loop, vs the HOF formulation's 64 interpreted array
-  * traversals re-hashing every shingle (observed 15 s for 5000 docs
-  * single-task; this runs the same input in tens of ms). */
-case class MinHashSignature(child: Expression)
-    extends UnaryExpression with StringArrayInput {
-
-  import MinHashSignature._
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "minhash_sig"
-
-  def compute(input: ArrayData): ArrayData = {
-    val out = Array.fill(NumHashes)(Long.MaxValue)
-    val n = input.numElements()
-    var j = 0
-    while (j < n) {
-      val h = Hash64.hash(input.getUTF8String(j))
-      var i = 0
-      while (i < NumHashes) {
-        val v = A(i) * h + B(i)
-        if (v < out(i)) out(i) = v
-        i += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashExpr", this)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
-  val NumHashes = 64
-  // fixed-seed affine permutation constants (odd multipliers)
-  private val rnd = new scala.util.Random(0x5EED5EED)
-  val A: Array[Long] = Array.fill(NumHashes)(rnd.nextLong() | 1L)
-  val B: Array[Long] = Array.fill(NumHashes)(rnd.nextLong())
-}
-
 /** ONE-PERMUTATION MinHash signature computed straight from the token
   * array (Li, Owen & Zhang 2012; densification per Shrivastava & Li
-  * 2014) — the scale face of [[MinHashSignature]]. Two costs vanish
-  * relative to the classic shingle-string pipeline:
+  * 2014). Two costs vanish relative to the classic shingle-string
+  * pipeline (one strong hash per shingle string, then NumHashes affine
+  * permutations of it):
   *  - shingle strings never materialize: each token hashes ONCE and a
   *    word n-gram's hash is an order-sensitive O(n) combine of the
   *    token hashes (the interpreted wordShingles transform+concat_ws
@@ -117,7 +65,7 @@ object MinHashSignature {
   * gate-scale geometry), so existing signatures never move; the gram
   * hash loop is slot-count-independent (cost O(grams + slots)). */
 case class MinHashGramSignature(child: Expression, n: Int,
-    slots: Int = MinHashSignature.NumHashes)
+    slots: Int = MinHashGramSignature.NumHashes)
     extends UnaryExpression with StringArrayInput {
 
   require(n >= 1 && n <= 64, s"gram width out of range: $n")
@@ -185,90 +133,9 @@ case class MinHashGramSignature(child: Expression, n: Int,
       newChild: Expression): MinHashGramSignature = copy(child = newChild)
 }
 
-/** Native winnowed rolling-hash fingerprint (SURVEY §4's RollingHash):
-  * Rabin-Karp polynomial hashes of every k-char gram (O(1) per step via
-  * the rolling update), min-hash per sliding window of w grams
-  * (winnowing), distinct + sorted. Single pass over the string per row;
-  * replaces an interpreted HOF chain of substr/hash/slice/array_min. */
-case class RollingHashFingerprint(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "rolling_fingerprint"
-
-  private val Base = 1000003L
-  private lazy val basePowK: Long = {
-    var p = 1L; var i = 0
-    while (i < k - 1) { p *= Base; i += 1 }
-    p
-  }
-
-  def compute(input: UTF8String): ArrayData = {
-    val bytes = input.getBytes
-    val n = bytes.length
-    val nGrams = math.max(n - k + 1, 1)
-    val gramHashes = new Array[Long](nGrams)
-    if (n < k) {
-      // degenerate short string: hash the whole thing once
-      var h = 0L; var i = 0
-      while (i < n) { h = h * Base + (bytes(i) & 0xff); i += 1 }
-      gramHashes(0) = mix(h)
-    } else {
-      var h = 0L
-      var i = 0
-      while (i < k) { h = h * Base + (bytes(i) & 0xff); i += 1 }
-      gramHashes(0) = mix(h)
-      i = k
-      while (i < n) {
-        h = (h - (bytes(i - k) & 0xff) * basePowK) * Base + (bytes(i) & 0xff)
-        gramHashes(i - k + 1) = mix(h)
-        i += 1
-      }
-    }
-    // winnow: min per window of w gram hashes
-    val nWin = math.max(nGrams - w + 1, 1)
-    val winnowed = new java.util.TreeSet[java.lang.Long]()
-    var j = 0
-    while (j < nWin) {
-      var m = Long.MaxValue
-      var t = j
-      val end = math.min(j + w, nGrams)
-      while (t < end) { if (gramHashes(t) < m) m = gramHashes(t); t += 1 }
-      winnowed.add(m)
-      j += 1
-    }
-    val out = new Array[Long](winnowed.size())
-    val it = winnowed.iterator()
-    var idx = 0
-    while (it.hasNext) { out(idx) = it.next(); idx += 1 }
-    new GenericArrayData(out)
-  }
-
-  private def mix(h: Long): Long = {
-    var x = h
-    x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-    x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-    x ^ (x >>> 33)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rollingExpr", this)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashFingerprint =
-    copy(child = newChild)
+object MinHashGramSignature {
+  /** Default signature width: the gate-scale 64 slots. */
+  val NumHashes = 64
 }
 
 /** Codepoint-polynomial hashes shared by the ORACLE-REPLAYABLE sketch
@@ -960,16 +827,17 @@ case class PolySimHash(child: Expression)
     copy(child = newChild)
 }
 
-/** Winnowed fingerprint over [[PolyHash]] k-gram hashes — the
-  * oracle-replayable counterpart of [[RollingHashFingerprint]]: gram i
-  * hashes the CHARACTER window [i, i+k) with the B=31 mod-1000000007
+/** Winnowed fingerprint over [[PolyHash]] k-gram hashes (SURVEY §4's
+  * RollingHash), oracle-replayable: gram i hashes the CHARACTER
+  * (code point) window [i, i+k) with the B=31 mod-1000000007
   * polynomial (no mixing — the raw mod-p value IS the fingerprint, so
   * DuckDB reproduces it from substr + list_reduce), window-min per
   * sliding window of w grams, distinct + sorted. Rolling O(1) update
   * per gram with modular subtract (add p·B before subtracting to stay
   * non-negative); a document shorter than k grams contributes its
   * single whole-string hash, shorter than w windows a single
-  * whole-range min — same clipping as the production expression. */
+  * whole-range min. One pass per row replaces an interpreted HOF
+  * chain of substr/hash/slice/array_min. */
 case class PolyFingerprint(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 

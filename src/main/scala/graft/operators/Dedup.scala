@@ -518,12 +518,6 @@ object Dedup {
     }
   }
 
-  /** 64-element MinHash signature over the shingle set — the native
-    * graft.functions.MinHashSignature expression (one strong hash per
-    * shingle + 64 affine permutations in a primitive loop). */
-  def minhashSignature(shingles: Column): Column =
-    call_function("minhash_sig", shingles)
-
   /** (doc_id, band, bucket-hash) — one row per band per doc. Banding:
     * docs agreeing on ALL RowsPerBand signature slots of some band land
     * in the same bucket; with b=16, r=4 the S-curve threshold is
@@ -1006,12 +1000,6 @@ object Dedup {
     ladder.find(holds).getOrElse(ladder.last)
   }
 
-  /** 64-bit SimHash over a token-array column (occurrence weight 1):
-    * bit i is set iff the sum over tokens of ±1 (sign of bit i of the
-    * token hash) is positive. Native graft.functions.SimHash64 —
-    * per-row primitive loop, no shuffle. */
-  def simHash64(tokens: Column): Column = call_function("simhash64", tokens)
-
   /** Near-dup pairs by SimHash hamming distance <= maxDist, bucketed by
     * 3-chunk subsets of a 6-chunk split (the Manku et al. 2007
     * permuted-table idea in subset form — pigeonhole: distance<=3
@@ -1022,33 +1010,23 @@ object Dedup {
     * (subset, packed value), pair generation in the join's codegen
     * loop with no per-bucket array row.
     *
+    * The signature is the 60-bit graft.functions.PolySimHash
+    * (codepoint-polynomial token hashes, majority vote per bit) —
+    * exact integer math a SQL engine replays verbatim, so the emitted
+    * pair set hash-matches an ALL-PAIRS hamming oracle. A green gate
+    * therefore proves the signature, the pigeonhole bucket recall
+    * (every hamming<=3 pair shares a full 3-of-6-chunk subset), and
+    * the distance filter in one hash.
+    *
     * Scale note: random-hash candidate volume at the default 6-chunk
     * split is ~20·n²/2^31 — the round-11 4×16-bit single-chunk scheme
     * measured 8.4× at 10× data precisely because its n²/2^15
-    * candidate mass grew 100×. The chunk count is now CORPUS-DERIVED
+    * candidate mass grew 100×. The chunk count is CORPUS-DERIVED
     * ([[autoSimhashChunks]]): past each occupancy knee the ladder
-    * widens the split (6→7→…→12 chunks, subset keyspace 2^31→2^45+),
-    * holding expected random candidates LINEAR in n out to ~10¹¹ docs
-    * at the cost of C(k,3) fixed-width rows per doc in the bucket
-    * exchange (20→220 rows, still no text anywhere). */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashPairsFrom(
-      docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), simHash64(col("toks")).as("simhash")),
-      totalBits = 64, maxDist = maxDist,
-      chunks = Knobs.optInt("dedup.simhash_chunks")
-        .getOrElse(autoSimhashChunks(docs.count(), 64, maxDist)))
-
-  /** Oracle-gated SimHash face: identical bucketing/pair semantics to
-    * [[simhashPairs]], but the signature is the 60-bit
-    * graft.functions.PolySimHash (codepoint-polynomial token hashes,
-    * majority vote per bit) — exact integer math a SQL engine replays
-    * verbatim, so the emitted pair set hash-matches an ALL-PAIRS
-    * hamming oracle. A green gate therefore proves the signature, the
-    * pigeonhole bucket recall (every hamming<=3 pair shares a full
-    * 3-of-6-chunk subset), and the distance filter in one hash. The
-    * 64-bit production face keeps its property spec (denser bits for
-    * 100 TB bucket occupancy); this face is the correctness contract. */
+    * widens the split (6→7→…→12 chunks), holding expected random
+    * candidates LINEAR in n at the cost of C(k,3) fixed-width rows
+    * per doc in the bucket exchange (20→220 rows, still no text
+    * anywhere). */
   def polySimhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame =
     simhashPairsFrom(
       docs.select(col("doc_id"), split(col("text"), " ").as("toks"))

@@ -668,9 +668,6 @@ object Relational {
     // NTILE exactly on unique values (AnalyticsSpec proves parity);
     // where a tied value straddles an NTILE split, boundary bucketing
     // keeps the peer group together — the usual analytics preference.
-    // The exact-SQL NTILE+CUME_DIST face this replaces (correct, but a
-    // single-partition WindowExec — dimension-sized inputs only)
-    // survives as [[ntileCumeDist]] under its own spec.
     "q34_ntile" -> { (s, dir) =>
       bucketByBoundaries(
         Tables.load(s, dir, "customer")
@@ -1251,22 +1248,6 @@ object Relational {
         .orderBy(col("event_type"), col("day"))
     }
   )
-
-  /** The dimension-sized exact-SQL distribution windows q34 previously
-    * gated: NTILE(10) and CUME_DIST share one global sort, which Spark
-    * executes on a SINGLE partition (WindowExec warns) — correct only
-    * for inputs that fit one task. The registered q34 face is
-    * [[bucketByBoundaries]]; this face remains for spec coverage of
-    * the window semantics (balance, cume_dist monotonicity). */
-  def ntileCumeDist(customer: DataFrame): DataFrame = {
-    val byBal = Window.orderBy(col("c_acctbal"), col("c_custkey"))
-    val peers = Window.orderBy(col("c_acctbal"))
-    customer
-      .select(col("c_custkey"), col("c_acctbal"))
-      .withColumn("decile", ntile(10).over(byBal))
-      .withColumn("cd", cume_dist().over(peers))
-      .orderBy(col("c_custkey"))
-  }
 
   /** q29 — see the registry comment above for the one-shuffle plan
     * argument. Gap threshold is a SQL interval literal so the fixture

@@ -1541,92 +1541,43 @@ object Similarity {
     * whitening/variance-analysis primitive an embedding pipeline runs
     * before committing to a quantization or indexing scheme.
     *
-    * ONE distributed pass collects the sufficient statistics: the
-    * native outer_upper expression emits each row's upper-triangle
-    * x·xᵀ with x appended (d(d+3)/2 doubles), posexplode +
-    * groupBy(pos) folds every partition to ≤d(d+3)/2 partial sums
-    * map-side, and only (pos, sum, count) triples — O(Dim²),
-    * corpus-size independent — reach the driver. The covariance is
-    * then C = (Σxxᵀ − n·μμᵀ)/(n−1) and the ENTIRE power iteration
-    * runs on the driver's Dim×Dim copy (microseconds at Dim=64).
-    * The previous shape paid one full cluster pass — scan, center,
-    * matvec, Dim-row collect — PER iteration step (up to 16 jobs);
-    * this is the textbook distributed-PCA split: data passes for
-    * statistics, driver flops for the eigensolve. Centering in
-    * covariance space trades a cancellation hazard only when
-    * ‖μ‖² ≫ variance — embeddings are near-zero-mean, the same
-    * tradeoff Spark MLlib's computeCovariance makes. The driver-side
-    * loop EXITS EARLY once the direction stops moving (1 − |v·v'| <
-    * tol, both unit vectors); `iters` is only the cap for gap-free
-    * spectra, and driver flops are cheap enough to raise it 20×.
+    * ONE distributed pass collects the sufficient statistics
+    * ([[covarianceOf]]): the native outer_upper expression emits each
+    * row's upper-triangle x·xᵀ with x appended (d(d+3)/2 doubles),
+    * posexplode + groupBy(pos) folds every partition to ≤d(d+3)/2
+    * partial sums map-side, and only (pos, sum, count) triples —
+    * O(Dim²), corpus-size independent — reach the driver. The
+    * covariance is then C = (Σxxᵀ − n·μμᵀ)/(n−1) and the ENTIRE power
+    * iteration runs on the driver's Dim×Dim copy (microseconds at
+    * Dim=64) — the textbook distributed-PCA split: data passes for
+    * statistics, driver flops for the eigensolve, instead of one full
+    * cluster pass (scan, center, matvec, Dim-row collect) per
+    * iteration step. Centering in covariance space trades a
+    * cancellation hazard only when ‖μ‖² ≫ variance — embeddings are
+    * near-zero-mean, the same tradeoff Spark MLlib's computeCovariance
+    * makes.
     *
-    * The a-posteriori certificate stays a DISTRIBUTED pass over the
-    * raw data (explicit centered matvec, an independent computation
-    * path from the Gram statistics): total cluster work is exactly
-    * two jobs regardless of iteration count.
-    *
-    * Sign is canonicalized (largest-|loading| dimension positive) so
-    * output is stable run-to-run; float-sum ordering makes the last
-    * digits environment-dependent, hence rows-only gating with the
-    * eigen-equation property-checked in SimilaritySpec. */
-  def topComponent(vecs: DataFrame, iters: Int = 300,
-      tol: Double = 1e-12): DataFrame = {
-    val (cov, mean, n) = covarianceOf(vecs)
-    // driver-side matvec against the Dim×Dim covariance copy
-    def matvec(v: Array[Double]): Array[Double] =
-      Array.tabulate(Dim) { i =>
-        var s = 0.0; var j = 0
-        while (j < Dim) { s += cov(i)(j) * v(j); j += 1 }
-        s
-      }
-    var v = Array.fill(Dim)(1.0 / math.sqrt(Dim))
-    var eig = 0.0
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val av = matvec(v)
-      val norm = math.sqrt(av.map(x => x * x).sum)
-      eig = norm // Rayleigh estimate: ||C v|| with ||v|| = 1
-      val vNew = av.map(_ / norm)
-      // both unit vectors: |cos| → 1 as the direction stabilizes
-      converged = 1.0 - math.abs(v.zip(vNew).map { case (a, b) => a * b }.sum) < tol
-      v = vNew
-      it += 1
-    }
-    // a-posteriori certificate: ‖C v − λ v‖ / λ over the FINAL v (one
-    // extra pass). Small residual ⇒ (λ, v) genuinely solves the eigen
-    // equation — a silently wrong iteration (bad centering, a dropped
-    // dimension, a sign bug) cannot produce a small residual. The
-    // bound rides on every output row as resid_ok so a regression is
-    // visible in the dump itself, not only in the test suite. 0.10
-    // covers the near-gap-free synthetic corpus (measured 0.052 at
-    // sf0.001, 0.028 at sf0.01 with the 15-iteration cap); a real
-    // embedding corpus with any dominant direction converges far
-    // below it.
-    val cvFinal = centeredMatvecPass(vecs, mean, v).map(_ / (n - 1))
-    val resid = math.sqrt(
-      v.indices.map(i => math.pow(cvFinal(i) - eig * v(i), 2)).sum) / eig
-    val flip = if (v(v.indices.maxBy(i => math.abs(v(i)))) < 0) -1.0 else 1.0
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    v.toIndexedSeq.zipWithIndex
-      .map { case (x, i) => (i.toLong, x * flip, eig, resid, resid < 0.10) }
-      .toDF("dim", "loading", "eigenvalue", "resid_rel", "resid_ok")
-      .orderBy(col("dim"))
-  }
-
-  /** Oracle face of [[topComponent]]: identical covariance and update
-    * rule, but the power iteration runs EXACTLY `iters` steps with no
-    * early exit, and loadings/eigenvalue are rounded to 4 decimals.
-    * A fixed-step iterate v_K = C^K v_0 / ‖·‖ is a smooth function of
-    * C with only ~K-fold error amplification — unlike
+    * The power iteration runs EXACTLY `iters` steps with no early
+    * exit, and loadings/eigenvalue are rounded to 4 decimals. A
+    * fixed-step iterate v_K = C^K v_0 / ‖·‖ is a smooth function of C
+    * with only ~K-fold error amplification — unlike
     * run-to-convergence, whose sensitivity is 1/spectral-gap — so an
     * independent engine recomputing C from the raw embeddings in a
     * different summation order (~1e-15 relative) lands within ~1e-12
     * of the same iterate, and the 4-decimal rounding absorbs it. The
     * DuckDB oracle replays the identical recursion as a recursive CTE
     * over the covariance it derives itself from the embeddings table —
-    * a data-tied replay of the certificate, not a copy of the answer. */
+    * a data-tied replay of the certificate, not a copy of the answer.
+    *
+    * The a-posteriori certificate ‖C v − λ v‖ / λ is a DISTRIBUTED
+    * pass over the raw data ([[centeredMatvecPass]], an independent
+    * computation path from the Gram statistics), so total cluster
+    * work is exactly two jobs regardless of iteration count. A small
+    * residual means (λ, v) genuinely solves the eigen equation — a
+    * silently wrong iteration (bad centering, a dropped dimension, a
+    * sign bug) cannot produce one; the bound rides on every output
+    * row as resid_ok. Sign is canonicalized (largest-|loading|
+    * dimension positive) so output is stable run-to-run. */
   def topComponentCertified(vecs: DataFrame, iters: Int = 60): DataFrame = {
     val (cov, mean, n) = covarianceOf(vecs)
     def matvec(v: Array[Double]): Array[Double] =
@@ -1645,8 +1596,8 @@ object Similarity {
       v = av.map(_ / norm)
       it += 1
     }
-    // same independent-path certificate as topComponent: distributed
-    // centered matvec over the raw data, not the Gram statistics
+    // 0.10 covers the near-gap-free synthetic corpus; a real embedding
+    // corpus with any dominant direction converges far below it
     val cvFinal = centeredMatvecPass(vecs, mean, v).map(_ / (n - 1))
     val resid = math.sqrt(
       v.indices.map(i => math.pow(cvFinal(i) - eig * v(i), 2)).sum) / eig
@@ -1662,7 +1613,7 @@ object Similarity {
   }
 
   /** ONE distributed pass for the PCA sufficient statistics (see
-    * [[topComponent]]): outer_upper emits each row's upper-triangle
+    * [[topComponentCertified]]): outer_upper emits each row's upper-triangle
     * x·xᵀ with x appended, posexplode + groupBy(pos) folds partials
     * map-side, and only O(Dim²) (pos, sum, count) triples reach the
     * driver, where C = (Σxxᵀ − n·μμᵀ)/(n−1) is assembled. */

@@ -375,58 +375,36 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Rabin-Karp-style document fingerprint with winnowing: hash every
-    * k-char gram, take the min hash per sliding window of w grams, keep
-    * the distinct sorted set. Robust to small local edits; the sorted
-    * distinct set is deterministic and order-independent.
-    *
-    * The raw fingerprint set (array&lt;long&gt;) is an internal column;
-    * downstream consumers see scalar projections: xxhash64 over the
-    * sorted set (equal sets ⇒ equal hash), its size, and its min
-    * element. The CORRECTNESS face is [[fingerprintGate]]. */
-  def fingerprint(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
-    // native graft.functions.RollingHashFingerprint: true O(1)-per-step
-    // Rabin-Karp rolling hash + winnowing in one pass per row
-    docs.select(col("doc_id"),
-      call_function("rolling_fingerprint", col("text"), lit(k), lit(w))
-        .as("fingerprint"))
-      .select(col("doc_id"),
-        xxhash64(col("fingerprint")).as("fp_hash"),
-        size(col("fingerprint")).cast("long").as("fp_size"),
-        array_min(col("fingerprint")).as("fp_min"))
-      .orderBy(col("doc_id"))
-
-  /** Oracle-gated fingerprint face (q18/q21 contract shape): the hash
-    * values themselves are engine-specific, so the gate puts the
-    * STRUCTURAL guarantees of winnowing in-plan — the set is sorted,
-    * duplicate-free, non-empty, bounded by the k-gram count, and its
-    * head equals its min — alongside the oracle-computable n_chars. A
-    * winnowing regression (lost sort, dup entries, empty/overfull set)
-    * flips fp_ok and fails the hash. */
+  /** Winnowed document fingerprint, oracle-gated (q18/q21 contract
+    * shape): hash every k-char gram, take the min hash per sliding
+    * window of w grams, keep the distinct sorted set — robust to small
+    * local edits, deterministic and order-independent. The gate puts
+    * the STRUCTURAL guarantees of winnowing in-plan — the set is
+    * sorted, duplicate-free, non-empty, bounded by the k-gram count,
+    * and its head equals its min — alongside the oracle-computable
+    * n_chars. A winnowing regression (lost sort, dup entries,
+    * empty/overfull set) flips fp_ok and fails the hash. The native
+    * [[graft.functions.PolyFingerprint]] grams over code points, which
+    * is what `length` counts, so the size bound holds on any text. */
   def fingerprintGate(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
     docs.select(col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),
-      // the native expression grams over UTF-8 BYTES, so the size
-      // bound must use octet_length — character length undercounts on
-      // non-ASCII text and would flip the gate on valid data
-      octet_length(col("text")).cast("long").as("n_bytes"),
-      call_function("rolling_fingerprint", col("text"), lit(k), lit(w))
+      call_function("poly_fingerprint", col("text"), lit(k), lit(w))
         .as("fp"))
       .select(col("doc_id"), col("n_chars"),
         ((col("fp") === array_sort(col("fp"))) &&
           (size(col("fp")) === size(array_distinct(col("fp")))) &&
           size(col("fp")).between(
-            lit(1), greatest(col("n_bytes") - (k - 1), lit(1))) &&
+            lit(1), greatest(col("n_chars") - (k - 1), lit(1))) &&
           (array_min(col("fp")) === element_at(col("fp"), 1))).as("fp_ok"))
       .orderBy(col("doc_id"))
 
   /** Fingerprint-overlap containment pairs (the winnowing/MOSS shape):
-    * documents sharing >= minShared winnowed rolling-hash fingerprints.
-    * Catches PARTIAL overlap — a long span copied into an otherwise
-    * different document — which whole-document MinHash similarity
-    * misses (the copied span barely moves full-doc Jaccard). The
-    * decontamination sibling for intra-corpus quotation/boilerplate
-    * reuse.
+    * documents sharing >= minShared winnowed fingerprints. Catches
+    * PARTIAL overlap — a long span copied into an otherwise different
+    * document — which whole-document MinHash similarity misses (the
+    * copied span barely moves full-doc Jaccard). The decontamination
+    * sibling for intra-corpus quotation/boilerplate reuse.
     *
     * Same bucket-group shape as the LSH ops: explode fingerprints,
     * group by value, pair within posting lists, count shared prints
@@ -438,41 +416,18 @@ object TextAnalysis {
     * don't degenerate to all-pairs: 16-char grams (8-char grams of
     * ordinary prose collide corpus-wide — observed 91k pairs over 500
     * synthetic docs before this was raised), winnow window 8, posting
-    * cap 16, and >=5 independent shared prints as evidence. */
-  def winnowOverlapPairs(docs: DataFrame, minShared: Int = 5,
-      k: Int = 16, w: Int = 8, maxPosting: Int = 16): DataFrame =
-    docs
-      .select(col("doc_id"),
-        call_function("rolling_fingerprint", col("text"), lit(k), lit(w))
-          .as("fp"))
-      .select(col("doc_id"), explode(col("fp")).as("f"))
-      .groupBy(col("f"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxPosting))
-      .select(array_sort(col("ids")).as("ids"))
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ids) - 2),
-          |  i -> transform(sequence(i + 1, size(ids) - 1),
-          |    j -> struct(ids[i] AS doc_a, ids[j] AS doc_b))))""".stripMargin))
-        .as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** Oracle-gated winnow-overlap face: identical plan shape to
-    * [[winnowOverlapPairs]] but fingerprinting with the replayable
-    * codepoint-polynomial [[graft.functions.PolyFingerprint]] (B=31
-    * mod 1000000007, seed 0 — pure BIGINT math DuckDB recomputes
-    * verbatim from the character list), so the FULL pipeline — k-gram
-    * hashes, window-min winnowing, posting-list cutoff, pair
-    * generation, shared-print counts — is hash-gated against SQL,
-    * the dedup_simhash pattern. The byte-level Rabin-Karp face
-    * ([[winnowOverlapPairs]]) keeps its structural spec; this face is
-    * the correctness contract. Corpus precondition (holds for the
-    * generated documents table, checked in TextEtlSpec): ASCII,
-    * non-empty, single-spaced text — DuckDB's per-character split +
-    * UNICODE() then reproduces the JVM codePointAt fold exactly. */
+    * cap 16, and >=5 independent shared prints as evidence.
+    *
+    * Fingerprints come from the replayable codepoint-polynomial
+    * [[graft.functions.PolyFingerprint]] (B=31 mod 1000000007, seed 0
+    * — pure BIGINT math DuckDB recomputes verbatim from the character
+    * list), so the FULL pipeline — k-gram hashes, window-min
+    * winnowing, posting-list cutoff, pair generation, shared-print
+    * counts — is hash-gated against SQL, the dedup_simhash pattern.
+    * Corpus precondition (holds for the generated documents table,
+    * checked in TextEtlSpec): ASCII, non-empty, single-spaced text —
+    * DuckDB's per-character split + UNICODE() then reproduces the JVM
+    * codePointAt fold exactly. */
   def winnowOverlapPairsPoly(docs: DataFrame, minShared: Int = 5,
       k: Int = 16, w: Int = 8, maxPosting: Int = 16): DataFrame =
     docs

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -10,12 +10,20 @@ import graft.sources.Tables
 
 /** Event-stream operators (SURVEY §2D).
   *
-  * Each operator has two faces with identical semantics:
-  *  - a BATCH face (used by the correctness gate — SQL-oracled against
-  *    DuckDB on the same events table), and
-  *  - a STREAMING face (Structured Streaming with watermarks /
-  *    flatMapGroupsWithState), exercised by the test suite against the
-  *    batch face's results.
+  * The windowed operators — [[windowAgg]], [[slidingAgg]],
+  * [[sessionWindow]], [[topUserCounts]] and [[staticEnrich]] — each
+  * have ONE definition that runs on a batch table or on a stream. The
+  * watermark is part of the definition: on a batch plan Spark drops
+  * `withWatermark` when the Dataset is built, so the registry key
+  * (SQL-oracled against DuckDB on the events table, the registry
+  * lambda adding the final `orderBy`) and the streaming query
+  * (parity-tested against the key) run the same code.
+  *
+  * Operators whose streaming form is a different ALGORITHM keep two
+  * faces — a BATCH face (correctness-gated) and a STREAMING face
+  * (flatMapGroupsWithState, a sketch, a stateful aggregate or a sink)
+  * tested against it: sessionize, CEP, gap-fill, exact distinct, the
+  * interval join, CDC apply, dedup and the upsert sink.
   *
   * Scale notes: the windowed agg is a single shuffle keyed by
   * (window, event_type) with map-side partial aggregation; watermarking
@@ -27,32 +35,107 @@ object Streaming {
   val SessionGapMinutes = 30
   private val gapUs: Long = SessionGapMinutes * 60L * 1000000L
 
-  // -- batch faces (correctness-gated) ------------------------------------
+  /** Watermark delay of the windowed operators: state for a window or
+    * session is dropped once event time passes its end by this much. */
+  val WatermarkDelay = "2 hours"
 
-  /** Tumbling 1-hour windows per event type. */
-  def batchWindowAgg(events: DataFrame): DataFrame =
-    events.groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-      .orderBy(col("window_start"), col("event_type"))
+  /** The events' value total, summed in DECIMAL so every grouping and
+    * every micro-batch split gives the same double. */
+  private def totalValue: Column =
+    sum(col("value").cast(DecimalType(18, 2))).cast("double")
+      .as("total_value")
+
+  // -- one definition for batch and stream ---------------------------------
+
+  /** Tumbling 1-hour windows per event type. On a stream, append mode
+    * emits each window once the watermark passes it. */
+  def windowAgg(events: DataFrame): DataFrame =
+    typeWindowTotals(events, window(col("ts"), "1 hour"))
 
   /** Sliding (hopping) windows: 1-hour windows advancing every 30
     * minutes, per event type — every event contributes to exactly
     * duration/slide (= 2) windows. Spark expands the window set inline
     * (no self-union of the input); the only shuffle is the groupBy
-    * keyed by (window, event_type) with map-side partial agg. */
-  def batchSlidingAgg(events: DataFrame): DataFrame =
-    events.groupBy(window(col("ts"), "1 hour", "30 minutes"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
+    * keyed by (window, event_type) with map-side partial agg. Stream
+    * state per key is bounded by (watermark delay + duration) / slide
+    * windows. */
+  def slidingAgg(events: DataFrame): DataFrame =
+    typeWindowTotals(events, window(col("ts"), "1 hour", "30 minutes"))
+
+  private def typeWindowTotals(events: DataFrame, w: Column): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(w, col("event_type"))
+      .agg(count(lit(1)).as("n"), totalValue)
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
-      .orderBy(col("window_start"), col("event_type"))
+
+  /** Per-(hour, user) event counts — the pre-aggregation of the
+    * windowed top-k (leaderboards, hot-key monitors, trending
+    * detectors). One map-side-combined count keyed by (window, user);
+    * on a stream, append mode emits a window's counts once, when it
+    * closes, and state is bounded by the watermark horizon. The
+    * registry key ranks them with [[rankTopUsers]]. */
+  def topUserCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(window(col("ts"), "1 hour"), col("user_id"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").as("window_start"), col("user_id"),
+        col("n"))
+
+  /** The k most active users per window over completed (window, user)
+    * counts, with a TOTAL rank order (count desc, then user_id) so the
+    * cut is a pure function of the data. A window-keyed ROW_NUMBER cut
+    * — the WindowGroupLimit plan (rank pushes into a per-partition
+    * top-k before the shuffle), never a global sort. Applied at read
+    * time on a stream — the standard streaming-top-k split: ranking
+    * inside the stream would need arbitrary per-window state for a
+    * result that is only final at watermark close anyway. */
+  def rankTopUsers(counts: DataFrame, k: Int = 3): DataFrame = {
+    val w = Window.partitionBy(col("window_start"))
+      .orderBy(col("n").desc, col("user_id"))
+    counts.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .orderBy(col("window_start"), col("rank"))
+  }
+
+  /** Native session windows (session_window). Same gaps-and-islands
+    * semantics as [[batchSessionize]] EXCEPT the boundary: Spark's
+    * session window spans [first_ts, last_ts + gap), so an event at
+    * exactly last_ts + gap starts a NEW session (the custom-state
+    * variant keeps it — its condition is gap > threshold). Emitted
+    * session_end is last_ts + gap (the window bound, not the last
+    * event); the oracle restates both choices relationally. One
+    * shuffle keyed by user_id; Spark merges overlapping candidate
+    * windows inside the session-window aggregation. On a stream,
+    * Spark's session state store merges per-user windows across
+    * micro-batches and closes a session when the watermark passes its
+    * end — the declarative counterpart of [[sessionizeStream]]'s
+    * custom state; state per active user is the open session's
+    * bounds only. */
+  def sessionWindow(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
+      .groupBy(col("user_id"),
+        session_window(col("ts"), s"$SessionGapMinutes minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("session_start"),
+        col("w.end").as("session_end"), col("n_events"))
+
+  /** Static-dimension enrichment, join stage: the event stream joined
+    * to a slowly-changing dimension snapshot (customer keyed by
+    * user_id). A stream-static equi-join holds no watermark and no
+    * join state — the static side is wholly available every
+    * micro-batch and is re-read then (picking up dimension updates
+    * between batches). Spark broadcasts the dim when it is small; a
+    * fact-scale dim shuffles per micro-batch — pre-bucket it on the
+    * join key instead. The registry key aggregates the join per
+    * segment. */
+  def staticEnrich(events: DataFrame, customer: DataFrame): DataFrame =
+    events.join(customer.select(col("c_custkey"), col("c_mktsegment")),
+        col("user_id") === col("c_custkey"))
+      .select(col("event_id"), col("user_id"), col("c_mktsegment"),
+        col("value"))
+
+  // -- batch faces (correctness-gated) ------------------------------------
 
   /** Windowed distinct-user cardinality, batch face: exact
     * COUNT(DISTINCT) per (hour, type) with the HLL++ estimate gated
@@ -100,51 +183,11 @@ object Streaming {
     * parity-tested sketch-equal to the batch estimate (same hash, same
     * sketch, same value). */
   def streamingDistinctUsers(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
+    events.withWatermark("ts", WatermarkDelay)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(approx_count_distinct(col("user_id"), 0.02).as("n_approx"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_approx"))
-
-  /** Windowed top-k, batch face: the k most active users per tumbling
-    * hour (leaderboards, hot-key monitors, trending detectors) with a
-    * TOTAL rank order (count desc, then user_id) so the cut is a pure
-    * function of the data. Shape: one (window, user) map-side-combined
-    * count, then a window-keyed ROW_NUMBER cut — the WindowGroupLimit
-    * plan (rank pushes into a per-partition top-k before the shuffle),
-    * never a global sort. */
-  def batchTopUsers(events: DataFrame, k: Int = 3): DataFrame =
-    rankTopUsers(
-      events.groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("user_id"),
-          col("n")), k)
-
-  /** The serving-side rank for [[batchTopUsers]] /
-    * [[streamingTopUserCounts]]: top-k cut over completed (window,
-    * user) counts. Split out because the STREAMING formulation
-    * pre-aggregates counts under a watermark (append mode emits a
-    * window's counts once, when it closes) and applies this rank at
-    * read time — the standard streaming-top-k split: ranking inside
-    * the stream would need arbitrary per-window state for a result
-    * that is only final at watermark close anyway. */
-  def rankTopUsers(counts: DataFrame, k: Int = 3): DataFrame = {
-    val w = Window.partitionBy(col("window_start"))
-      .orderBy(col("n").desc, col("user_id"))
-    counts.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy(col("window_start"), col("rank"))
-  }
-
-  /** Streaming face of the top-k pre-aggregation: watermarked
-    * (window, user) counts, append mode — state is bounded by the
-    * watermark horizon. */
-  def streamingTopUserCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("user_id"),
-        col("n"))
 
   /** Gap-based sessionization, batch face: a new session starts when
     * the gap to the previous event of the same user exceeds
@@ -165,25 +208,6 @@ object Streaming {
         max(col("ts")).as("session_end"))
       .orderBy(col("user_id"), col("session_id"))
   }
-
-  /** Native session windows (session_window), batch face. Same
-    * gaps-and-islands semantics as [[batchSessionize]] EXCEPT the
-    * boundary: Spark's session window spans [first_ts, last_ts + gap),
-    * so an event at exactly last_ts + gap starts a NEW session (the
-    * custom-state variant keeps it — its condition is gap > threshold).
-    * Emitted session_end is last_ts + gap (the window bound, not the
-    * last event), matching the streaming face bit-for-bit; the oracle
-    * restates both choices relationally. One shuffle keyed by user_id;
-    * Spark merges overlapping candidate windows inside the
-    * session-window aggregation. */
-  def batchSessionWindow(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$SessionGapMinutes minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-      .orderBy(col("user_id"), col("session_start"))
 
   /** Click→purchase conversions: every (click, purchase) pair of the
     * same user with the purchase inside [click, click+gap]. Batch face
@@ -237,22 +261,8 @@ object Streaming {
     events.union(events.filter(col("event_id") % 17 === 0))
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
+      .agg(count(lit(1)).as("n"), totalValue)
       .orderBy(col("event_type"))
-
-  /** Static-dimension enrichment, batch face: the event stream joined
-    * to a slowly-changing dimension snapshot (customer keyed by
-    * user_id), aggregated per segment. */
-  def batchStaticEnrich(events: DataFrame, customer: DataFrame): DataFrame =
-    events.join(customer.select(col("c_custkey"), col("c_mktsegment")),
-        col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
-      .orderBy(col("c_mktsegment"))
 
   /** Watermark-lateness accounting, batch face: how many rows a
     * `withWatermark(delay)` pipeline would drop, and how late they are.
@@ -293,9 +303,9 @@ object Streaming {
   val LateDelayMs = 600000L // 10-minute watermark delay
   val LateChunk = 1000L
 
-  /** Observed (jittered) event time in epoch ms — shared by both
-    * late-audit faces so the model and the engine see the same skew. */
-  def lateObsMs: org.apache.spark.sql.Column =
+  /** Observed (jittered) event time in epoch ms: the event-time skew
+    * the late audit models. */
+  private def lateObsMs: Column =
     unix_millis(col("ts")) -
       ((col("event_id") % 1000003L) * 2654435761L % 3600L) * 1000L
 
@@ -437,47 +447,6 @@ object Streaming {
         .withColumn("ts", col("ts").cast(TimestampType))
     }
   }
-
-  /** Watermarked tumbling-window agg — the streaming face of
-    * batchWindowAgg. Append mode emits each window once its watermark
-    * passes. */
-  def streamingWindowAgg(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** Watermarked sliding-window agg — the streaming face of
-    * batchSlidingAgg. State per key is bounded by (watermark delay +
-    * duration) / slide windows. */
-  def streamingSlidingAgg(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** Watermarked NATIVE session windows — the streaming face of
-    * [[batchSessionWindow]]. Spark's SessionWindowStateStore merges
-    * overlapping per-user windows across micro-batches and closes a
-    * session when the watermark passes its end — the built-in
-    * counterpart of the flatMapGroupsWithState variant below (which
-    * demonstrates custom state; this one demonstrates that the
-    * declarative form suffices when gap semantics are all you need).
-    * State per active user is the open session's bounds only. */
-  def streamingSessionWindow(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$SessionGapMinutes minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
 
   // state carried per user between micro-batches: open session bounds.
   // Timestamps travel as epoch MICROS end-to-end — converting through
@@ -685,27 +654,13 @@ object Streaming {
         col("click_ts"), col("purchase_ts"))
   }
 
-  /** Streaming face of [[batchStaticEnrich]], join stage only (the agg
-    * parity rides on the batch face's oracle): a STREAM-STATIC
-    * equi-join — no watermark and no join state, because the static
-    * side is wholly available every micro-batch and is re-read then
-    * (picking up dimension updates between batches). Spark broadcasts
-    * the dim when it is small; a fact-scale dim shuffles per
-    * micro-batch — pre-bucket it on the join key instead. */
-  def streamingStaticEnrich(events: DataFrame, customer: DataFrame): DataFrame =
-    events.join(customer.select(col("c_custkey"), col("c_mktsegment")),
-        col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"),
-        col("value"))
-
   /** Per-user materialized state, batch face: the table a streaming
     * upsert sink converges to after consuming the whole stream. */
   def batchUserState(events: DataFrame): DataFrame =
     events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         max(col("ts")).as("last_ts"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
+        totalValue)
       .orderBy(col("user_id"))
 
   /** Streaming face of [[batchUserState]]: a foreachBatch UPSERT sink —
@@ -868,26 +823,32 @@ object Streaming {
     "stream_upsert_sink" -> ((s, dir) =>
       batchUserState(Tables.load(s, dir, "events"))),
     "stream_window_agg" -> ((s, dir) =>
-      batchWindowAgg(Tables.load(s, dir, "events"))),
+      windowAgg(Tables.load(s, dir, "events"))
+        .orderBy(col("window_start"), col("event_type"))),
     "stream_approx_distinct" -> ((s, dir) =>
       batchDistinctUsers(Tables.load(s, dir, "events"))),
     "stream_cep_pairs" -> ((s, dir) =>
       batchCepPairs(Tables.load(s, dir, "events"))),
     "stream_topk" -> ((s, dir) =>
-      batchTopUsers(Tables.load(s, dir, "events"))),
+      rankTopUsers(topUserCounts(Tables.load(s, dir, "events")))),
     "stream_sliding_agg" -> ((s, dir) =>
-      batchSlidingAgg(Tables.load(s, dir, "events"))),
+      slidingAgg(Tables.load(s, dir, "events"))
+        .orderBy(col("window_start"), col("event_type"))),
     "stream_sessionize" -> ((s, dir) =>
       batchSessionize(Tables.load(s, dir, "events"))),
     "stream_session_window" -> ((s, dir) =>
-      batchSessionWindow(Tables.load(s, dir, "events"))),
+      sessionWindow(Tables.load(s, dir, "events"))
+        .orderBy(col("user_id"), col("session_start"))),
     "stream_stream_join" -> ((s, dir) =>
       batchClickConversions(Tables.load(s, dir, "events"))),
     "stream_dedup" -> ((s, dir) =>
       batchDedup(Tables.load(s, dir, "events"))),
     "stream_static_join" -> ((s, dir) =>
-      batchStaticEnrich(Tables.load(s, dir, "events"),
-        Tables.load(s, dir, "customer"))),
+      staticEnrich(Tables.load(s, dir, "events"),
+        Tables.load(s, dir, "customer"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_events"), totalValue)
+        .orderBy(col("c_mktsegment"))),
     "stream_late_audit" -> ((s, dir) =>
       batchLateAudit(Tables.load(s, dir, "events"))),
     "stream_rate_alert" -> ((s, dir) =>

@@ -215,22 +215,6 @@ class AnalyticsSpec extends GraftSpec {
     assert(!plan.contains("Window"), s"global window in bucket pass:\n$plan")
   }
 
-  test("ntile deciles are balanced and cume_dist is monotone in balance") {
-    // the dimension-sized exact-window face (no longer the gated q34)
-    val customer = spark.read.parquet(s"$sf/customer.parquet")
-    val rows = Relational.ntileCumeDist(customer).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2), r.getDouble(3)))
-    val byDecile = rows.groupBy(_._3).view.mapValues(_.length).toMap
-    assert(byDecile.keySet == (1 to 10).toSet)
-    assert(byDecile.values.max - byDecile.values.min <= 1,
-      s"unbalanced deciles: $byDecile")
-    val sorted = rows.sortBy(r => (r._2, r._1))
-    assert(sorted.sliding(2).forall {
-      case Array(a, b) => a._4 <= b._4 && a._3 <= b._3
-      case _ => true
-    }, "cume_dist/decile not monotone in balance order")
-  }
-
   test("gated q34 deciles are windowless and balanced up to tie groups") {
     val df = SparkEntry.queries("q34_ntile")(spark, sf)
     val rows = df.collect()

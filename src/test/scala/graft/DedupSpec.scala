@@ -16,27 +16,6 @@ class DedupSpec extends GraftSpec {
     assert(got.toSeq == Seq((1L, 3L), (3L, 1L)))
   }
 
-  test("minhash signature agreement approximates true Jaccard") {
-    // two 60-word texts sharing the first 40 words → word-3-gram
-    // shingle Jaccard ≈ (38 shared) / (58+58-38)
-    val common = (1 to 40).map(i => s"w$i").mkString(" ")
-    val a = common + " " + (1 to 20).map(i => s"a$i").mkString(" ")
-    val b = common + " " + (1 to 20).map(i => s"b$i").mkString(" ")
-    val df = textsDF(1L -> a, 2L -> b)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), Dedup.wordShingles(col("toks")).as("sh"))
-      .select(col("doc_id"), Dedup.minhashSignature(col("sh")).as("sig"))
-    val sigs = df.orderBy("doc_id").collect()
-      .map(_.getSeq[Long](1).toIndexedSeq)
-    val agree = sigs(0).zip(sigs(1)).count { case (x, y) => x == y }
-    val estimate = agree.toDouble / Dedup.NumHashes
-    val shA = a.split(" ").sliding(3).map(_.mkString(" ")).toSet
-    val shB = b.split(" ").sliding(3).map(_.mkString(" ")).toSet
-    val trueJ = (shA & shB).size.toDouble / (shA | shB).size
-    assert(math.abs(estimate - trueJ) < 0.2,
-      s"minhash estimate $estimate vs true Jaccard $trueJ")
-  }
-
   test("one-permutation minhash signature: agreement approximates true " +
       "Jaccard, identical texts collide fully, disjoint texts do not") {
     val common = (1 to 40).map(i => s"w$i").mkString(" ")
@@ -116,7 +95,8 @@ class DedupSpec extends GraftSpec {
       2L -> "spark scales out with partitions and shuffles",
       3L -> "entirely different words about cooking pasta tonight")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), Dedup.simHash64(col("toks")).as("h"))
+      .select(col("doc_id"),
+        call_function("simhash64", col("toks")).as("h"))
     val h = df.orderBy("doc_id").collect().map(_.getLong(1))
     def hamming(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(hamming(h(0), h(1)) == 0)
@@ -306,7 +286,7 @@ class DedupSpec extends GraftSpec {
   }
 
   test("simhash pairs respect the hamming bound and ordering") {
-    val pairs = Dedup.simhashPairs(
+    val pairs = Dedup.polySimhashPairs(
       graft.sources.Tables.load(spark, sf, "documents")).collect()
     assert(pairs.nonEmpty)
     pairs.foreach { r =>

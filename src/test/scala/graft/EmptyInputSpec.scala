@@ -39,7 +39,7 @@ class EmptyInputSpec extends GraftSpec {
         ((d: DataFrame) => TextAnalysis.winnowOverlapPairsPoly(d)),
       "exact" -> Dedup.exact _,
       "minhashPairs" -> ((d: DataFrame) => Dedup.minhashPairs(d)),
-      "simhashPairs" -> ((d: DataFrame) => Dedup.simhashPairs(d)),
+      "polySimhashPairs" -> ((d: DataFrame) => Dedup.polySimhashPairs(d)),
       "nearDupClusters" -> Dedup.nearDupClusters _,
       "stratifiedSample" ->
         ((d: DataFrame) => Sampling.stratifiedSample(d)),

@@ -45,11 +45,42 @@ class FunctionsSpec extends GraftSpec {
     assert(r.head == 12.0)
   }
 
+  test("every injected function is called outside graft.functions or " +
+      "allow-listed with its caller") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // a kernel no operator calls is an unshipped twin of a shipped
+    // algorithm; names whose only caller lives outside src/main say
+    // who calls them here
+    val allowed = Map(
+      "simhash64" -> "perfbench/driver/Driver.scala (functions layer)",
+      "word_gram_digests" -> "perfbench/driver/Driver.scala (functions layer)")
+    val injected = spark.catalog.listFunctions().collect()
+      .filter(_.className == classOf[graft.functions.GraftExtensions].getName)
+      .map(_.name).toSet
+    assert(injected.contains("dot_product") && injected.contains("top_c"),
+      s"extension functions not listed: $injected")
+    val root = Paths.get("src/main/scala/graft")
+    val walk = Files.walk(root)
+    val sources = try walk.iterator().asScala
+      .filter((p: Path) => p.toString.endsWith(".scala") &&
+        !p.startsWith(root.resolve("functions")))
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).toList
+    finally walk.close()
+    val uncalled = injected.filterNot(n =>
+      sources.exists(_.contains("\"" + n + "\"")))
+    assert((uncalled -- allowed.keySet).isEmpty,
+      s"injected but never called from src/main: ${uncalled -- allowed.keySet}")
+    assert((allowed.keySet -- uncalled).isEmpty,
+      s"stale allow-list entries (called in src/main or not injected): " +
+        s"${allowed.keySet -- uncalled}")
+  }
+
   test("rolling fingerprint is edit-robust and deterministic") {
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val edited = base.replace("lazy", "hazy") // one local edit
     val fps = Seq((1L, base), (2L, base), (3L, edited)).toDF("id", "t")
-      .select(call_function("rolling_fingerprint", col("t"), lit(8), lit(4)))
+      .select(call_function("poly_fingerprint", col("t"), lit(8), lit(4)))
       .collect().map(_.getSeq[Long](0).toSet)
     assert(fps(0) == fps(1)) // deterministic
     val overlap = (fps(0) & fps(2)).size.toDouble / (fps(0) | fps(2)).size

@@ -4,12 +4,15 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.sources.Tables
 import graft.streaming.Streaming
 
-/** Streaming faces must agree with their oracle-gated batch faces. */
+/** Streaming runs must agree with the oracle-gated batch results: the
+  * windowed operators' one definition on a stream and on the table,
+  * and the two-face operators' streaming face against their batch
+  * face. */
 class StreamingSpec extends GraftSpec {
 
   test("streaming window agg equals the batch face (complete mode)") {
     val stream = Streaming.eventsStream(spark, sf)
-    val q = Streaming.streamingWindowAgg(stream).writeStream
+    val q = Streaming.windowAgg(stream).writeStream
       .format("memory").queryName("win_out")
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
@@ -18,7 +21,7 @@ class StreamingSpec extends GraftSpec {
     val got = spark.table("win_out").collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val want = Streaming.batchWindowAgg(Tables.load(spark, sf, "events"))
+    val want = Streaming.windowAgg(Tables.load(spark, sf, "events"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -27,7 +30,7 @@ class StreamingSpec extends GraftSpec {
 
   test("streaming sliding-window agg equals the batch face (complete mode)") {
     val stream = Streaming.eventsStream(spark, sf)
-    val q = Streaming.streamingSlidingAgg(stream).writeStream
+    val q = Streaming.slidingAgg(stream).writeStream
       .format("memory").queryName("slide_out")
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
@@ -36,7 +39,7 @@ class StreamingSpec extends GraftSpec {
     val got = spark.table("slide_out").collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val want = Streaming.batchSlidingAgg(Tables.load(spark, sf, "events"))
+    val want = Streaming.slidingAgg(Tables.load(spark, sf, "events"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -81,7 +84,7 @@ class StreamingSpec extends GraftSpec {
   test("stream-static dim join enriches every matching event") {
     val stream = Streaming.eventsStream(spark, sf)
     val customer = Tables.load(spark, sf, "customer")
-    val q = Streaming.streamingStaticEnrich(stream, customer).writeStream
+    val q = Streaming.staticEnrich(stream, customer).writeStream
       .format("memory").queryName("enrich_out")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
@@ -89,13 +92,18 @@ class StreamingSpec extends GraftSpec {
     q.awaitTermination(120000)
     val got = spark.table("enrich_out").collect()
       .map(r => (r.getLong(0), r.getString(2))).toSet
-    val want = Tables.load(spark, sf, "events")
+    val events = Tables.load(spark, sf, "events")
+    val want = Streaming.staticEnrich(events, customer).collect()
+      .map(r => (r.getLong(0), r.getString(2))).toSet
+    assert(got == want) // stateless join: nothing held back at stream end
+    assert(got.nonEmpty)
+    // and the definition enriches exactly the plain equi-join's events
+    val joined = events
       .join(customer, org.apache.spark.sql.functions.col("user_id") ===
         org.apache.spark.sql.functions.col("c_custkey"))
       .select("event_id", "c_mktsegment").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == want) // stateless join: nothing held back at stream end
-    assert(got.nonEmpty)
+    assert(want == joined)
   }
 
   test("foreachBatch upsert sink converges to the batch user state") {
@@ -550,7 +558,7 @@ class StreamingSpec extends GraftSpec {
 
   test("native session windows: closed streaming sessions match batch") {
     val stream = Streaming.eventsStream(spark, sf)
-    val q = Streaming.streamingSessionWindow(stream).writeStream
+    val q = Streaming.sessionWindow(stream).writeStream
       .format("memory").queryName("sw_out")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
@@ -560,7 +568,7 @@ class StreamingSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         r.getLong(3))).toSet
     val batch = Streaming
-      .batchSessionWindow(Tables.load(spark, sf, "events")).collect()
+      .sessionWindow(Tables.load(spark, sf, "events")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         r.getLong(3))).toSet
     // append mode emits only sessions the final watermark closed —
@@ -679,7 +687,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming top-k: watermarked pre-agg counts ranked at read " +
       "time equal the batch leaderboard") {
     val stream = Streaming.eventsStream(spark, sf)
-    val q = Streaming.streamingTopUserCounts(stream).writeStream
+    val q = Streaming.topUserCounts(stream).writeStream
       .format("memory").queryName("topk_out")
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
@@ -688,7 +696,8 @@ class StreamingSpec extends GraftSpec {
     val got = Streaming.rankTopUsers(spark.table("topk_out")).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    val want = Streaming.batchTopUsers(Tables.load(spark, sf, "events"))
+    val want = Streaming.rankTopUsers(
+        Streaming.topUserCounts(Tables.load(spark, sf, "events")))
       .collect()
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet

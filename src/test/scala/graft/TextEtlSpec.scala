@@ -208,7 +208,7 @@ class TextEtlSpec extends GraftSpec {
     val b = (0 until 30).map(i => s"bhead$i").mkString(" ") + " " + span
     val c = (0 until 60).map(i => s"cword$i").mkString(" ")
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val pairs = TextAnalysis.winnowOverlapPairs(df).collect()
+    val pairs = TextAnalysis.winnowOverlapPairsPoly(df).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     // the ~250-char shared span yields many shared winnowed prints
     assert(pairs.contains((1L, 2L)), s"span reuse not detected: $pairs")
@@ -233,17 +233,25 @@ class TextEtlSpec extends GraftSpec {
   }
 
   test("poly winnow overlap face detects the same planted span reuse") {
+    // same planted span, fed in reversed doc order: the pair must still
+    // come out once, canonically ordered, and minShared must gate it
     val span = (0 until 30).map(i => s"shared$i").mkString(" ")
     val a = span + " " + (0 until 30).map(i => s"atail$i").mkString(" ")
     val b = (0 until 30).map(i => s"bhead$i").mkString(" ") + " " + span
     val c = (0 until 60).map(i => s"cword$i").mkString(" ")
-    val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val pairs = TextAnalysis.winnowOverlapPairsPoly(df).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    val df = Seq((3L, c), (2L, b), (1L, a)).toDF("doc_id", "text")
+    val rows = TextAnalysis.winnowOverlapPairsPoly(df).collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+    val pairs = rows.toMap
+    assert(rows.length == pairs.size, s"duplicate pair rows: ${rows.toSeq}")
     assert(pairs.contains((1L, 2L)), s"span reuse not detected: $pairs")
+    assert(!pairs.contains((2L, 1L)), "pair must be emitted as (lo, hi)")
     assert(pairs((1L, 2L)) >= 3)
     assert(!pairs.keySet.exists(p => p._1 == 3L || p._2 == 3L),
       "disjoint doc must not pair")
+    val gated = TextAnalysis.winnowOverlapPairsPoly(df,
+      minShared = (pairs((1L, 2L)) + 1).toInt).count()
+    assert(gated == 0, "minShared above the shared count must drop the pair")
   }
 
   test("bm25 retrieval: dense ranks, non-increasing scores, a " +
