@@ -57,14 +57,11 @@ object Etl {
     if (loc.exists) rm(loc)
   }
 
-  val trustedSchema: StructType = StructType(Seq(
-    StructField("codigo", LongType),
-    StructField("descricao", StringType),
-    StructField("segmento", StringType)))
-
   val rawSchema: StructType = StructType(Seq(
     StructField("codigo", LongType),
     StructField("descricao", StringType)))
+
+  val trustedSchema: StructType = Medallion.trustedSchemaOf(rawSchema)
 
   /** Deterministic landing fixture for etl_raw_roundtrip: a ZIP holding
     * an ISO-8859-1, `;`-delimited, headerless CSV derived from the
@@ -666,8 +663,7 @@ object Etl {
         .write.mode("overwrite").text(rawDir)
       Medallion.rawToTrusted(s, rawDir, s"$root/trusted", rawSchema, "codigo")
       Medallion.trustedToRefined(
-        s, s"$root/trusted", s"$root/refined",
-        Medallion.trustedSchemaOf(rawSchema))
+        s, s"$root/trusted", s"$root/refined", trustedSchema)
       s.read.parquet(s"$root/refined").orderBy(col("codigo"))
     },
 
@@ -699,8 +695,7 @@ object Etl {
         .write.mode("overwrite").text(rawDir)
       Medallion.rawToTrusted(s, rawDir, s"$root/trusted", rawSchema, "codigo")
       Medallion.trustedToRefined(
-        s, s"$root/trusted", s"$root/refined",
-        Medallion.trustedSchemaOf(rawSchema))
+        s, s"$root/trusted", s"$root/refined", trustedSchema)
       s.read.parquet(s"$root/refined").orderBy(col("codigo"))
     },
 
@@ -884,7 +879,7 @@ object Etl {
       Tables.load(s, dir, "customer")
         .select(col("c_custkey").cast("long"), col("c_name"))
         .coalesce(1).write.mode("overwrite")
-        .options(Map("delimiter" -> ";", "header" -> "false"))
+        .options(CsvIngest.rawOptions)
         .csv(s"$root/raw")
       val tick = new java.util.concurrent.atomic.AtomicInteger(0)
       val clock = () => f"2024-06-01T00:00:${tick.incrementAndGet()}%02dZ"
@@ -956,7 +951,7 @@ object Etl {
           Tables.load(s, dir, "customer")
             .select(col("c_custkey").cast("long"), col("c_name"))
             .coalesce(1).write.mode("overwrite")
-            .options(Map("delimiter" -> ";", "header" -> "false"))
+            .options(CsvIngest.rawOptions)
             .csv(s"$root/raw")
           (1L, Tables.load(s, dir, "customer").count())
         })

@@ -40,10 +40,13 @@ object Graph {
     // projection + partial distinct), and AQE's byte-based coalescing
     // squeezed it to 3 of 32 slots at sf0.1 (profiled r18: a 0.49 s
     // 3-task stage on every co-purchase consumer). A user repartition
-    // with an explicit partition count is exempt from AQE coalescing,
-    // satisfies the join's required distribution (no extra exchange —
-    // the join needed these two shuffles anyway), and derives its
-    // width from the session, never a tuned constant.
+    // with an explicit partition count is exempt from AQE coalescing
+    // and derives its width from the session, never a tuned constant.
+    // Under a sort-merge join it satisfies the join's required
+    // distribution and adds no exchange. Under a broadcast join (the
+    // committed graph_degree_audit fingerprint at sf0.001 has
+    // BroadcastHashJoinExec=2, ShuffleExchangeExec=9) both
+    // repartitions are exchanges the join itself would not need.
     val width = orders.sparkSession.sparkContext.defaultParallelism
     val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
       .repartition(width, col("o_orderkey"))

@@ -11,19 +11,19 @@ import graft.sources.{CsvIngest, Sinks}
   * reference's job chain (reference: src/script/script.py end-to-end,
   * src/utils/transform.py:14-70 CSV→parquet refine, dag.py task order).
   *
-  * All paths are caller-supplied local/URI paths — storage layout is a
-  * deployment concern, not engine code.
+  * All paths are caller-supplied local paths or Hadoop FileSystem URIs
+  * — storage layout is a deployment concern, not engine code.
   */
 object Medallion {
 
   /** raw CSV (schema-enforced, reference options) → cleaned trusted
-    * single-file pipe CSV with header + BOM. Returns the part file. */
+    * single-file pipe CSV with header + BOM, in one Spark write. */
   def rawToTrusted(
       spark: SparkSession,
       rawPath: String,
       trustedDir: String,
       schema: StructType,
-      codeCol: String): java.io.File = {
+      codeCol: String): Unit = {
     val raw = CsvIngest.read(spark, rawPath, schema)
     val cleaned = Cleaning.referenceClean(raw, codeCol)
     Sinks.writeSingleCsv(cleaned, trustedDir)

@@ -21,8 +21,11 @@ object CsvIngest {
     "quote" -> "\"",
     "escape" -> "\"")
 
-  /** Options for the trusted layer the reference writes
-    * (pipe-delimited, with header — script.py:63-70). */
+  /** The trusted layer's dialect (pipe-delimited, with header —
+    * script.py:63-70), shared by its writer (`Sinks.writeSingleCsv`)
+    * and every reader. The escape must be the doubled quote on both
+    * sides: the writer's default backslash escape would corrupt values
+    * containing quotes on the trusted→refined read-back. */
   val trustedOptions: Map[String, String] = Map(
     "header" -> "true",
     "delimiter" -> "|",

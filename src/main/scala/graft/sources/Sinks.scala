@@ -1,16 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
-import java.io.File
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Writers for the medallion layers.
   *
-  * - Trusted: single-file pipe-delimited CSV with header plus a UTF-8
-  *   BOM for spreadsheet compatibility (reference: src/script/script.py:
-  *   63-70 coalesce(1) CSV write; src/utils/scraping.py:111-182
-  *   `add_bom_csv` prepends `EF BB BF` unless already present).
+  * - Trusted: single-file CSV in the [[CsvIngest.trustedOptions]]
+  *   dialect (pipe-delimited, header, doubled-quote escapes) whose
+  *   first bytes are a UTF-8 BOM for spreadsheet compatibility
+  *   (reference: src/script/script.py:63-70 coalesce(1) CSV write;
+  *   src/utils/scraping.py:111-182 `add_bom_csv` prepends `EF BB BF`).
   * - Refined: snappy parquet (reference: src/utils/transform.py:14-70).
+  *
+  * Every layer is written once by Spark, so any Hadoop FileSystem URI
+  * (file://, hdfs://, s3a://, gs://) works and the checksum sidecars
+  * Hadoop writes stay valid.
   *
   * Scale note: `coalesce(1)` funnels the whole dataset through one task
   * — it is an EXPORT boundary for small, human-facing extracts, never
@@ -19,9 +23,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object Sinks {
 
-  val BomUtf8: Array[Byte] = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
-
-  /** Single-file CSV export (trusted layer). Returns the part-file path.
+  /** Single-file CSV export (trusted layer), written by one Spark write.
+    *
+    * The BOM rides the header: the first column's name gets a U+FEFF
+    * prefix for this write only, and U+FEFF UTF-8-encodes to
+    * `EF BB BF`, so the file's first three bytes are the BOM the
+    * reference's `add_bom_csv` prepends — with no second pass over the
+    * extract. The header field is written unquoted (U+FEFF is neither a
+    * delimiter, a quote nor whitespace), and the trusted reads skip the
+    * header against an enforced schema, so the name never surfaces.
     *
     * `_SUCCESS` markers are SUPPRESSED at the committer level (the
     * reference disables `mapreduce.fileoutputcommitter.
@@ -31,46 +41,15 @@ object Sinks {
     * byte-level infidelity to the reference layout. Spark merges write
     * options into the job's Hadoop conf, so the option scopes to THIS
     * write only. */
-  def writeSingleCsv(
-      df: DataFrame,
-      dir: String,
-      delimiter: String = "|",
-      header: Boolean = true,
-      withBom: Boolean = true): File = {
-    df.coalesce(1)
+  def writeSingleCsv(df: DataFrame, dir: String): Unit = {
+    val names = df.columns.toIndexedSeq
+    df.toDF(names.updated(0, "\uFEFF" + names.head): _*)
+      .coalesce(1)
       .write
       .mode("overwrite")
-      .option("header", header.toString)
-      .option("delimiter", delimiter)
+      .options(CsvIngest.trustedOptions)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // doubled-quote escaping, matching CsvIngest.trustedOptions — the
-      // writer default (backslash escape) would silently corrupt values
-      // containing quotes on the trusted→refined read-back
-      .option("quote", "\"")
-      .option("escape", "\"")
       .csv(dir)
-    val part = new File(dir).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .getOrElse(sys.error(s"no part-*.csv produced under $dir"))
-    if (withBom) addBom(part)
-    part
-  }
-
-  /** Prepend a UTF-8 BOM unless the file already starts with one —
-    * same idempotency check as the reference's add_bom_csv. */
-  def addBom(file: File): Unit = {
-    val bytes = Files.readAllBytes(file.toPath)
-    val hasBom = bytes.length >= 3 &&
-      bytes(0) == BomUtf8(0) && bytes(1) == BomUtf8(1) && bytes(2) == BomUtf8(2)
-    if (!hasBom) {
-      Files.write(file.toPath, BomUtf8 ++ bytes,
-        StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-      // The out-of-band rewrite invalidates Hadoop LocalFileSystem's
-      // .crc sidecar (the reference's GCS layer has no such sidecar);
-      // drop it so subsequent Spark reads don't fail checksum.
-      Files.deleteIfExists(
-        Paths.get(file.getParent, s".${file.getName}.crc"))
-    }
   }
 
   /** Refined layer: snappy parquet, optionally partitioned by columns
@@ -108,11 +87,14 @@ object Sinks {
     * bit-for-bit (hash-checked by the etl_compact oracle);
     * `repartition` is a full shuffle by design — it levels file sizes
     * regardless of input skew. Returns the output file count. */
-  def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
+  def compact(spark: SparkSession, inDir: String,
       outDir: String, targetFileBytes: Long = 128L << 20): Int = {
     val df = spark.read.parquet(inDir)
-    val totalBytes = df.inputFiles
-      .map(f => new File(new java.net.URI(f).getPath).length()).sum
+    val conf = spark.sparkContext.hadoopConfiguration
+    val totalBytes = df.inputFiles.map { f =>
+      val p = new Path(new java.net.URI(f))
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }.sum
     val nFiles = math.max(1, math.ceil(
       totalBytes.toDouble / targetFileBytes).toInt)
     df.repartition(nFiles).write.mode("overwrite").parquet(outDir)

@@ -9,6 +9,15 @@ import graft.operators.Etl
 import graft.pipeline.Medallion
 import graft.sources.{CsvIngest, Sinks}
 
+/** The local file system under its own `graftfs` scheme: a layer
+  * writer that bypasses the Hadoop FileSystem cannot resolve its paths. */
+class SchemeLocalFs extends org.apache.hadoop.fs.LocalFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+    }) {
+  override def getScheme: String = "graftfs"
+}
+
 /** End-to-end medallion pipeline checks: writer/reader quote contract,
   * the full zip→raw→trusted→refined roundtrip, and the audited run. */
 class MedallionSpec extends GraftSpec {
@@ -29,6 +38,71 @@ class MedallionSpec extends GraftSpec {
     val files = new java.io.File(s"$dir/csv").listFiles().map(_.getName)
     assert(!files.contains("_SUCCESS"),
       s"trusted dir must carry no _SUCCESS marker: ${files.toSeq}")
+  }
+
+  /** Bytes of the one part-*.csv under a local `dir`. */
+  private def partBytes(dir: String): Array[Byte] = {
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(parts.length == 1, s"expected one part file under $dir")
+    Files.readAllBytes(parts.head.toPath)
+  }
+
+  test("trusted export = EF BB BF + a plain coalesce(1) write in the " +
+      "trusted dialect, for a tricky-quote frame and an empty frame") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "bomeq").toString
+    val tricky = Seq((1L, """he said "hi"|and; more"""), (2L, "plain"))
+      .toDF("codigo", "descricao")
+    val empty = Seq.empty[(Long, String)].toDF("codigo", "descricao")
+    Seq("tricky" -> tricky, "empty" -> empty).foreach { case (name, df) =>
+      Sinks.writeSingleCsv(df, s"$dir/$name/trusted")
+      df.coalesce(1).write.options(CsvIngest.trustedOptions)
+        .csv(s"$dir/$name/plain")
+      val plain = partBytes(s"$dir/$name/plain")
+      assert(plain.nonEmpty, s"$name: plain write has no header")
+      assert(partBytes(s"$dir/$name/trusted").toSeq ==
+        (Seq(0xEF, 0xBB, 0xBF).map(_.toByte) ++ plain.toSeq), name)
+    }
+  }
+
+  test("rawToTrusted → trustedToRefined through file:// URI dirs and " +
+      "a non-file FileSystem scheme") {
+    val root = Files.createTempDirectory(Paths.get("target"), "uri")
+      .toAbsolutePath.toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    Files.write(Paths.get(s"$root/raw/data.csv"),
+      "1;alpha\n2;\"be;ta\"\n3;  ".getBytes(StandardCharsets.UTF_8))
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[SchemeLocalFs].getName)
+    Seq("file", "graftfs").foreach { scheme =>
+      val uri = s"$scheme://$root"
+      Medallion.rawToTrusted(spark, s"$uri/raw", s"$uri/$scheme/trusted",
+        Etl.rawSchema, "codigo")
+      Medallion.trustedToRefined(spark, s"$uri/$scheme/trusted",
+        s"$uri/$scheme/refined", Etl.trustedSchema)
+      assert(partBytes(s"$root/$scheme/trusted").take(3).toSeq ==
+        Seq(0xEF, 0xBB, 0xBF).map(_.toByte), scheme)
+      val got = spark.read.parquet(s"$uri/$scheme/refined").orderBy("codigo")
+        .collect().map(r => (r.getLong(0), Option(r.getString(1)),
+          r.getString(2))).toSeq
+      assert(got == Seq((1L, Some("alpha"), "PRIMARIO"),
+        (2L, Some("be;ta"), "SECUNDARIO"), (3L, None, "PRIMARIO")),
+        s"$scheme: $got")
+    }
+  }
+
+  test("Sinks and Medallion touch files only through Spark / Hadoop " +
+      "FileSystem") {
+    // a local-only file API on a layer's data path breaks every
+    // non-local URI (hdfs://, s3a://, gs://) and bypasses Hadoop's
+    // checksums
+    Seq("sources/Sinks.scala", "pipeline/Medallion.scala").foreach { f =>
+      val src = new String(Files.readAllBytes(
+        Paths.get("src/main/scala/graft", f)), StandardCharsets.UTF_8)
+      Seq("java.io.File", "java.nio.file").foreach { api =>
+        assert(!src.contains(api), s"$f uses $api")
+      }
+    }
   }
 
   test("etl_raw_roundtrip: accents and quoting survive zip→raw→refined") {

@@ -426,17 +426,25 @@ class TextEtlSpec extends GraftSpec {
   }
 
   test("single-file CSV sink writes a BOM exactly once") {
-    val dir = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("target"), "bomtest")
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory(Paths.get("target"), "bomtest")
       .toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val part = Sinks.writeSingleCsv(df, s"$dir/csv")
-    val bytes = java.nio.file.Files.readAllBytes(part.toPath)
-    assert(bytes.take(3).sameElements(Sinks.BomUtf8))
-    Sinks.addBom(part) // idempotent: must not double-prepend
-    val again = java.nio.file.Files.readAllBytes(part.toPath)
-    assert(again.length == bytes.length)
-    // readable by Spark after the out-of-band rewrite (crc dropped)
+    // a second export into the same dir replaces the first: no BOM
+    // stacks up on the rewrite
+    Sinks.writeSingleCsv(df, s"$dir/csv")
+    Sinks.writeSingleCsv(df, s"$dir/csv")
+    val names = new java.io.File(s"$dir/csv").list().toSeq
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".csv"))
+    assert(parts.length == 1, s"expected one part file: $names")
+    val bytes = Files.readAllBytes(Paths.get(s"$dir/csv", parts.head))
+    val bom = Seq(0xEF, 0xBB, 0xBF).map(_.toByte)
+    assert(bytes.take(3).toSeq == bom)
+    assert(bytes.slice(3, 6).toSeq != bom)
+    assert(new String(bytes, 3, bytes.length - 3, "UTF-8") ==
+      "id|v\n1|a\n2|b\n")
+    // Spark's own checksum sidecar stays and still verifies on read
+    assert(names.contains(s".${parts.head}.crc"), s"no .crc: $names")
     assert(spark.read.option("header", "true").option("delimiter", "|")
       .csv(s"$dir/csv").count() == 2)
   }
