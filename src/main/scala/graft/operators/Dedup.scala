@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Knobs, Tables}
+import graft.sources.{Knobs, Stores, Tables}
 
 /** Deduplication operators (SURVEY §2C) — exact and near-duplicate.
   *
@@ -821,21 +821,17 @@ object Dedup {
   // PERSISTED band store whose corpus count later crossed an
   // autoGeometry rung would silently need a full re-band of history.
   // This split pins the rule in code the way the PQ index does
-  // (ensureIndex + marker + atomic rename): geometry is derived from
+  // (published through Stores.ensure): geometry is derived from
   // the ceiling at BUILD time, persisted beside the band rows, read
   // back at PROBE time, and the probe REFUSES loudly when the live
   // corpus exceeds the pinned ceiling — never a silent recall cliff.
 
-  /** LSH store root under the shared
-    * [[graft.sources.Tables.scratchRoot]]. */
-  def lshStoreRoot: String = graft.sources.Tables.scratchRoot + "/lsh_store"
-
-  /** On-disk location of the band store for a dataset directory. The
-    * ceiling rides the path (the pqIndexPath convention), so a ceiling
-    * change can never probe a stale-geometry store. */
+  /** The band store of a dataset directory; the ceiling rides the path. */
   def lshStorePath(dir: String, corpusCeiling: Long): String =
-    s"$lshStoreRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
-      s"/near_c$corpusCeiling"
+    Stores.path(Stores.Lsh, dir, s"near_c$corpusCeiling")
+
+  private val LshGeometrySchema =
+    "bands INT, rows_per_band INT, corpus_ceiling BIGINT, hist_count BIGINT"
 
   /** Materialize the near-dup band store: exact-dup representatives of
     * `history`, banded under `autoGeometry(corpusCeiling)` — the
@@ -848,17 +844,12 @@ object Dedup {
   def buildLshStore(history: DataFrame, path: String,
       corpusCeiling: Long): Unit = {
     val histCount = history.count()
-    require(histCount <= corpusCeiling,
-      s"buildLshStore: history count $histCount exceeds the pinned " +
-        s"corpus ceiling $corpusCeiling — pin the ceiling at planned " +
-        "capacity, not below the data you already have")
+    Stores.checkBuildCeiling(Stores.Lsh, path, histCount, corpusCeiling)
     val g = autoGeometry(corpusCeiling)
     banded(exactReps(history), g).withColumnRenamed("doc_id", "hist_id")
       .write.mode("overwrite").parquet(s"$path/bands")
-    import history.sparkSession.implicits._
-    Seq((g.bands, g.rowsPerBand, corpusCeiling, histCount))
-      .toDF("bands", "rows_per_band", "corpus_ceiling", "hist_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
+    Stores.writeGeometry(history.sparkSession, path, LshGeometrySchema,
+      g.bands, g.rowsPerBand, corpusCeiling, histCount)
   }
 
   /** Probe a PERSISTED band store with a batch — [[incrementalNear]]'s
@@ -877,16 +868,10 @@ object Dedup {
       path: String, threshold: Double = 0.8,
       maxBucket: Int = Knobs.int("dedup.max_bucket", MaxBucket)): DataFrame = {
     val spark = batch.sparkSession
-    val geo = spark.read.parquet(s"$path/geometry").collect() match {
-      case Array(row) => row
-      case rows => throw new IllegalStateException(
-        s"LSH store $path: geometry sidecar has ${rows.length} rows, " +
-          "expected exactly 1 — corrupt store")
-    }
-    val g = BandGeometry(geo.getAs[Int]("bands"),
-      geo.getAs[Int]("rows_per_band"))
-    val ceiling = geo.getAs[Long]("corpus_ceiling")
-    val histCount = geo.getAs[Long]("hist_count")
+    val geo = Stores.geometry(spark, Stores.Lsh, path, LshGeometrySchema)
+    val g = BandGeometry(geo.getInt(0), geo.getInt(1))
+    val ceiling = geo.getLong(2)
+    val histCount = geo.getLong(3)
     require(g == autoGeometry(ceiling),
       s"LSH store $path: pinned geometry $g does not match its " +
         s"recorded ceiling $ceiling (expects ${autoGeometry(ceiling)}) " +
@@ -903,13 +888,10 @@ object Dedup {
         s"store banded $histCount — new history docs have NO band " +
         "rows and their near-dups would be silently missed; rebuild " +
         "the store (or fold the delta through the batch side)")
-    val live = histCount + batch.count()
-    require(live <= ceiling,
-      s"LSH store $path: live corpus $live exceeds the pinned ceiling " +
-        s"$ceiling — the build-time geometry no longer holds recall; " +
-        "rebuild the store with a larger ceiling (re-banding history " +
-        "is REQUIRED past the ceiling, by design never implicit)")
-    incrementalNearFrom(spark.read.parquet(s"$path/bands"), history,
+    Stores.checkServeCeiling(Stores.Lsh, path,
+      histCount + batch.count(), ceiling)
+    incrementalNearFrom(Stores.read(spark, s"$path/bands",
+        "hist_id BIGINT, band INT, bucket BIGINT"), history,
       batch, g, threshold, maxBucket)
   }
 
@@ -1494,7 +1476,7 @@ object Dedup {
       val history = docs.filter(col("doc_id") % 3 =!= 0)
       val ceiling = 4L * docs.count()
       val path = lshStorePath(dir, ceiling)
-      Similarity.ensureIndex(path)(tmp =>
+      Stores.ensure(path)(tmp =>
         buildLshStore(history, tmp, ceiling))
       incrementalNearServe(history,
         docs.filter(col("doc_id") % 3 === 0), path)

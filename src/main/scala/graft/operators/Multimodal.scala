@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 
 /** A multimodal record: an opaque binary payload plus typed metadata.
   * Top-level case classes so Spark derives Encoders. */
@@ -430,7 +430,7 @@ object Multimodal {
       val thumbs = thumbTable(docs, famMod = math.max(50L, n / 10))
       val ceiling = 4L * n
       val path = phashStorePath(dir, ceiling)
-      Similarity.ensureIndex(path)(tmp =>
+      Stores.ensure(path)(tmp =>
         buildPhashStore(thumbs.filter(col("doc_id") % 3 =!= 0), tmp,
           ceiling))
       phashServe(thumbs.filter(col("doc_id") % 3 === 0), path)
@@ -729,17 +729,12 @@ object Multimodal {
   // loudly past the ceiling or on a sidecar/ceiling mismatch — the
   // dedup_incr_near_serve discipline applied to the image family.
 
-  /** pHash store root under the shared
-    * [[graft.sources.Tables.scratchRoot]]. */
-  def phashStoreRoot: String =
-    graft.sources.Tables.scratchRoot + "/phash_store"
-
-  /** On-disk store location for a dataset directory; the ceiling rides
-    * the path (the pqIndexPath convention) so a ceiling change can
-    * never probe a stale-geometry store. */
+  /** The store of a dataset directory; the ceiling rides the path. */
   def phashStorePath(dir: String, corpusCeiling: Long): String =
-    s"$phashStoreRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
-      s"/near_c$corpusCeiling"
+    Stores.path(Stores.Phash, dir, s"near_c$corpusCeiling")
+
+  private val PhashGeometrySchema =
+    "chunks INT, max_dist INT, corpus_ceiling BIGINT, hist_count BIGINT"
 
   /** Materialize the image near-dup store: aHash signatures of the
     * history thumbnails, exploded into chunk-subset bucket rows under
@@ -754,19 +749,14 @@ object Multimodal {
   def buildPhashStore(thumbs: DataFrame, path: String,
       corpusCeiling: Long, maxDist: Int = 3): Unit = {
     val histCount = thumbs.count()
-    require(histCount <= corpusCeiling,
-      s"buildPhashStore: history count $histCount exceeds the pinned " +
-        s"corpus ceiling $corpusCeiling — pin the ceiling at planned " +
-        "capacity, not below the data you already have")
+    Stores.checkBuildCeiling(Stores.Phash, path, histCount, corpusCeiling)
     val chunks = Dedup.autoSimhashChunks(corpusCeiling, 64, maxDist,
       minChunks = maxDist + 1)
     Dedup.simhashSubsetKeys(ahashSigs(thumbs), 64, maxDist, chunks)
       .withColumnsRenamed(Map("doc_id" -> "hist_id", "simhash" -> "hist_sim"))
       .write.mode("overwrite").parquet(s"$path/bands")
-    import thumbs.sparkSession.implicits._
-    Seq((chunks, maxDist, corpusCeiling, histCount))
-      .toDF("chunks", "max_dist", "corpus_ceiling", "hist_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
+    Stores.writeGeometry(thumbs.sparkSession, path, PhashGeometrySchema,
+      chunks, maxDist, corpusCeiling, histCount)
   }
 
   /** Probe the PERSISTED image store with a batch of thumbnails —
@@ -783,29 +773,19 @@ object Multimodal {
     * recorded ceiling derives (corrupt or foreign store). */
   def phashServe(batch: DataFrame, path: String): DataFrame = {
     val spark = batch.sparkSession
-    val geo = spark.read.parquet(s"$path/geometry").collect() match {
-      case Array(row) => row
-      case rows => throw new IllegalStateException(
-        s"pHash store $path: geometry sidecar has ${rows.length} rows, " +
-          "expected exactly 1 — corrupt store")
-    }
-    val chunks = geo.getAs[Int]("chunks")
-    val maxDist = geo.getAs[Int]("max_dist")
-    val ceiling = geo.getAs[Long]("corpus_ceiling")
-    val histCount = geo.getAs[Long]("hist_count")
+    val geo = Stores.geometry(spark, Stores.Phash, path, PhashGeometrySchema)
+    val chunks = geo.getInt(0)
+    val maxDist = geo.getInt(1)
+    val ceiling = geo.getLong(2)
+    val histCount = geo.getLong(3)
     val expect = Dedup.autoSimhashChunks(ceiling, 64, maxDist,
       minChunks = maxDist + 1)
     require(chunks == expect,
       s"pHash store $path: pinned chunk count $chunks does not match " +
         s"its recorded ceiling $ceiling (expects $expect) — corrupt " +
         "or foreign store; rebuild")
-    val live = histCount + batch.count()
-    require(live <= ceiling,
-      s"pHash store $path: live corpus $live exceeds the pinned " +
-        s"ceiling $ceiling — the build-time geometry no longer holds " +
-        "bucket occupancy; rebuild the store with a larger ceiling " +
-        "(re-bucketing history is REQUIRED past the ceiling, by " +
-        "design never implicit)")
+    Stores.checkServeCeiling(Stores.Phash, path,
+      histCount + batch.count(), ceiling)
     val sigs = ahashSigs(batch).localCheckpoint(true)
     val keys = Dedup.simhashSubsetKeys(sigs, 64, maxDist, chunks)
       .localCheckpoint(true)
@@ -813,7 +793,9 @@ object Multimodal {
     // rows; the exact hamming filter runs on the packed signatures, so
     // the join output needs no second verify pass
     val doh = keys
-      .join(spark.read.parquet(s"$path/bands"), Seq("chunk", "chunk_val"))
+      .join(Stores.read(spark, s"$path/bands",
+        "chunk INT, chunk_val BIGINT, hist_id BIGINT, hist_sim BIGINT"),
+        Seq("chunk", "chunk_val"))
       .filter(bit_count(col("simhash").bitwiseXOR(col("hist_sim")))
         <= maxDist)
       .select(col("doc_id")).distinct().withColumn("doh", lit(true))

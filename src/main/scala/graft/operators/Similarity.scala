@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
 
 import graft.functions.{HyperplaneBits, PqCodebook}
 import graft.plans.Loops
-import graft.sources.{Knobs, Tables}
+import graft.sources.{Knobs, Stores, Tables}
 
 /** Embedding similarity operators (SURVEY §2C): near-dup detection via
   * random-hyperplane LSH, brute-force cosine kNN, and IVF-bucketed
@@ -1334,10 +1334,10 @@ object Similarity {
   // parquet (the vector-store counterpart of the dedup_incremental*
   // text stores), and the `*Serve` faces read them back and run ONLY
   // the serving plan. Build is idempotent and crash/race-safe: the
-  // index is written to a scratch directory and atomically renamed into
-  // place, so concurrent builders (two test suites, bench + verify)
-  // converge on one complete index and a killed build never leaves a
-  // half-index behind the marker.
+  // index is published through [[graft.sources.Stores.ensure]], so
+  // concurrent builders (two test suites, bench + verify) converge on
+  // one complete index and a killed build never leaves a half-index
+  // behind the marker.
   //
   // Store format v3 (c_e widened to double on write — exact for float
   // centroids — so every frame reads back with a fixed schema):
@@ -1347,66 +1347,14 @@ object Similarity {
   //   both    geometry ([pq_k | centroid_budget], m, refine_iters,
   //           build_count)
 
-  /** Index store root under the shared scratch root
-    * ([[graft.sources.Tables.scratchRoot]]). `_v3`: v3 stores hold one
-    * packed code row per vector; the v2 (vec_id, m, cell) stores under
-    * the old root are orphaned scratch and are never read as v3. */
-  def indexRoot: String = Tables.scratchRoot + "/ann_index_v3"
-
-  private def sfTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** On-disk location of the PQ index for a dataset directory. The
-    * geometry rides the path, so parameter changes can never serve a
-    * stale-geometry index. */
+  /** The PQ index of a dataset directory; the geometry rides the path. */
   def pqIndexPath(dir: String, m: Int = 32, refineIters: Int = 1): String =
-    s"$indexRoot/${sfTag(dir)}/pq_m${m}_r$refineIters"
+    Stores.path(Stores.Ann, dir, s"pq_m${m}_r$refineIters")
 
   def ivfPqIndexPath(dir: String, centroidBudget: Int = CentroidBudget,
       m: Int = 32, refineIters: Int = 1): String =
-    s"$indexRoot/${sfTag(dir)}/ivfpq_c${centroidBudget}_m${m}_r$refineIters"
-
-  private val IndexMarker = "_GRAFT_INDEX_OK"
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
-  /** Run `build` into a scratch sibling of `path` and atomically rename
-    * it into place, unless a COMPLETE index (marker present) already
-    * sits there. Losing a build race is fine — the winner's index is
-    * byte-equivalent (the whole pipeline is deterministic); a complete
-    * index is never rebuilt, which is what makes the serve faces
-    * measure serving: the bench warmup pass builds, the timed runs
-    * only read. */
-  def ensureIndex(path: String)(build: String => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val p = Paths.get(path)
-    if (!Files.exists(p.resolve(IndexMarker))) {
-      val tmp = Paths.get(
-        s"$path.build-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      build(tmp.toString)
-      Files.createFile(tmp.resolve(IndexMarker))
-      Files.createDirectories(p.getParent)
-      try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          // target appeared since the check: either a complete index
-          // (another builder won — use theirs) or a markerless corpse
-          // from a killed build (replace it)
-          if (Files.exists(p.resolve(IndexMarker))) deleteRecursively(tmp)
-          else {
-            deleteRecursively(p)
-            Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-          }
-      }
-    }
-    path
-  }
+    Stores.path(Stores.Ann, dir,
+      s"ivfpq_c${centroidBudget}_m${m}_r$refineIters")
 
   private val CentsSchema =
     "m INT, c_id BIGINT, slot INT, c_e ARRAY<DOUBLE>, c_nrm DOUBLE"
@@ -1417,12 +1365,6 @@ object Similarity {
     cents.select(col("m"), col("c_id"), col("slot"),
         col("c_e").cast("array<double>").as("c_e"), col("c_nrm"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Index frames are read with the schema they were written with:
-    * inferring it costs a footer-reading job per frame on every
-    * serve. */
-  private def readStore(spark: SparkSession, path: String,
-      ddl: String): DataFrame = spark.read.schema(ddl).parquet(path)
 
   /** Materialize the PQ index (exact-face geometry by default) in store
     * format v3, plus the one-row geometry sidecar
@@ -1437,10 +1379,9 @@ object Similarity {
     val (book, codes) = pqIndex(vecs, k, refineIters, m)
     writeCents(book, s"$path/cents")
     codes.write.mode("overwrite").parquet(s"$path/codes")
-    import vecs.sparkSession.implicits._
-    Seq((k, m, refineIters, buildCount))
-      .toDF("pq_k", "m", "refine_iters", "build_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
+    Stores.writeGeometry(vecs.sparkSession, path,
+      "pq_k INT, m INT, refine_iters INT, build_count BIGINT",
+      k, m, refineIters, buildCount)
   }
 
   /** Materialize the IVF-PQ index in store format v3 and the one-row
@@ -1457,10 +1398,9 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/cells")
     writeCents(book, s"$path/pq_cents")
     codes.write.mode("overwrite").parquet(s"$path/codes")
-    import vecs.sparkSession.implicits._
-    Seq((centroidBudget, m, refineIters, buildCount))
-      .toDF("centroid_budget", "m", "refine_iters", "build_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
+    Stores.writeGeometry(vecs.sparkSession, path,
+      "centroid_budget INT, m INT, refine_iters INT, build_count BIGINT",
+      centroidBudget, m, refineIters, buildCount)
   }
 
   /** Read + validate an ANN index's one-row geometry sidecar, then
@@ -1478,13 +1418,8 @@ object Similarity {
     * which the serve faces also size their candidate budget from. */
   private def requireServableIndex(vecs: DataFrame, path: String,
       m: Int): Long = {
-    val geo = readStore(vecs.sparkSession, s"$path/geometry",
-        "m INT, build_count BIGINT").collect() match {
-      case Array(row) => row
-      case rows => throw new IllegalStateException(
-        s"ANN index $path: geometry sidecar has ${rows.length} rows, " +
-          "expected exactly 1 — corrupt store")
-    }
+    val geo = Stores.geometry(vecs.sparkSession, Stores.Ann, path,
+      "m INT, build_count BIGINT")
     val storedM = geo.getInt(0)
     require(storedM == m,
       s"ANN index $path: store was built with m=$storedM sub-quantizers " +
@@ -1511,11 +1446,11 @@ object Similarity {
     * oracle. */
   def knnPqServe(vecs: DataFrame, queryPred: Column, path: String,
       k: Int = 5, candidates: Option[Int] = None, m: Int = 32): DataFrame = {
-    ensureIndex(path)(tmp => buildPqIndex(vecs, tmp, m = m))
+    Stores.ensure(path)(tmp => buildPqIndex(vecs, tmp, m = m))
     val n = requireServableIndex(vecs, path, m)
     val spark = vecs.sparkSession
-    knnPqAdcFrom(readStore(spark, s"$path/cents", CentsSchema),
-      readStore(spark, s"$path/codes", "vec_id BIGINT, codes BINARY"),
+    knnPqAdcFrom(Stores.read(spark, s"$path/cents", CentsSchema),
+      Stores.read(spark, s"$path/codes", "vec_id BIGINT, codes BINARY"),
       vecs, queryPred, k, candidates.getOrElse(autoAdcCandidates(n)))
   }
 
@@ -1525,14 +1460,14 @@ object Similarity {
   def knnIvfPqServe(vecs: DataFrame, queryPred: Column, path: String,
       k: Int = 5, nprobe: Int = CentroidBudget,
       candidates: Option[Int] = None, m: Int = 32): DataFrame = {
-    ensureIndex(path)(tmp => buildIvfPqIndex(vecs, tmp, m = m))
+    Stores.ensure(path)(tmp => buildIvfPqIndex(vecs, tmp, m = m))
     val n = requireServableIndex(vecs, path, m)
     val spark = vecs.sparkSession
     knnIvfPqFrom(
-      readStore(spark, s"$path/cells",
+      Stores.read(spark, s"$path/cells",
         "c_id BIGINT, slot INT, c_e ARRAY<DOUBLE>, c_nrm DOUBLE"),
-      readStore(spark, s"$path/pq_cents", CentsSchema),
-      readStore(spark, s"$path/codes",
+      Stores.read(spark, s"$path/pq_cents", CentsSchema),
+      Stores.read(spark, s"$path/codes",
         "vec_id BIGINT, ivf_cell INT, codes BINARY"),
       vecs, queryPred, k, nprobe, candidates.getOrElse(autoAdcCandidates(n)))
   }

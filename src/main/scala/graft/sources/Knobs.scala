@@ -53,8 +53,6 @@ object Knobs {
     * defaults (+ env). */
   def clear(): Unit = { installed = None }
 
-  def installedProfile: Option[Profiles.Profile] = installed
-
   /** `dedup.max_bucket` → `GRAFT_DEDUP_MAX_BUCKET`. Locale-pinned:
     * the default-locale toUpperCase maps 'i' → 'İ' under a Turkish
     * JVM locale, silently breaking GRAFT_* resolution for every key

@@ -101,14 +101,6 @@ object Profiles {
     Profile(env, defaults ++ named ++ overrides)
   }
 
-  /** [[load]] from a file path. */
-  def loadFile(path: String, env: String, sectionPrefix: String = "",
-      overrides: Map[String, String] = Map.empty): Profile =
-    load(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8), env, sectionPrefix,
-      overrides)
-
   /** Environment-variable overrides in the `GRAFT_` convention:
     * `GRAFT_RAW_DIR=x` overrides setting `raw_dir`. */
   def envOverrides(env: Map[String, String],

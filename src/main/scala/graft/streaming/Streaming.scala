@@ -11,9 +11,10 @@ import graft.sources.Tables
 /** Event-stream operators (SURVEY §2D).
   *
   * The windowed operators — [[windowAgg]], [[slidingAgg]],
-  * [[sessionWindow]], [[topUserCounts]] and [[staticEnrich]] — each
-  * have ONE definition that runs on a batch table or on a stream. The
-  * watermark is part of the definition: on a batch plan Spark drops
+  * [[sessionWindow]], [[topUserCounts]] and [[staticEnrich]] — and
+  * [[cdcApply]] each have ONE definition that runs on a batch table or
+  * on a stream. The watermark is part of the definition (CDC apply
+  * needs none): on a batch plan Spark drops
   * `withWatermark` when the Dataset is built, so the registry key
   * (SQL-oracled against DuckDB on the events table, the registry
   * lambda adding the final `orderBy`) and the streaming query
@@ -23,7 +24,7 @@ import graft.sources.Tables
   * faces — a BATCH face (correctness-gated) and a STREAMING face
   * (flatMapGroupsWithState, a sketch, a stateful aggregate or a sink)
   * tested against it: sessionize, CEP, gap-fill, exact distinct, the
-  * interval join, CDC apply, dedup and the upsert sink.
+  * interval join, dedup and the upsert sink.
   *
   * Scale notes: the windowed agg is a single shuffle keyed by
   * (window, event_type) with map-side partial aggregation; watermarking
@@ -761,7 +762,7 @@ object Streaming {
     ()
   }
 
-  /** The deterministic CDC changelog both cdc-apply faces consume:
+  /** The deterministic CDC changelog [[cdcApply]] consumes:
     * every event is a keyed change op — a DELETE for every tenth
     * event_id, an UPSERT otherwise — ordered by (ts, event_id) within
     * its key. A derived view, so the contract exists at every SF. */
@@ -771,35 +772,21 @@ object Streaming {
         .as("op"),
       col("value"))
 
-  /** CDC changelog APPLY, batch face: materialize the final keyed
-    * state an I/U/D stream leaves behind — last op in (ts, event_id)
-    * order wins per key, keys whose last op is a DELETE vanish from
-    * the materialization. The Debezium/lakehouse merge semantic,
-    * reduced to ONE key-partitioned window argmax (the q22
-    * WindowGroupLimit shape — no self-join against a "latest" table)
-    * plus a same-exchange count; the value column rides the argmax
-    * row untouched, so there is no accumulation and no float seam. */
-  def batchCdcApply(events: DataFrame): DataFrame = {
-    val byKey = Window.partitionBy(col("user_id"))
-    val w = byKey.orderBy(col("ts").desc, col("event_id").desc)
-    cdcOps(events)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n_ops", count(lit(1)).over(byKey))
-      .filter(col("rn") === 1 && col("op") === "U")
-      .select(col("user_id"), col("n_ops"),
-        col("ts").as("last_ts"), col("value").as("last_value"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Streaming face of [[batchCdcApply]]: a stateful last-writer-wins
-    * aggregation — per key, max over the (ts, event_id)-ordered change
-    * struct (op and value ride along), plus the op count; tombstoned
-    * keys filter out AFTER the aggregate so a delete arriving mid-
+  /** CDC changelog APPLY: materialize the final keyed state an I/U/D
+    * stream leaves behind — last op in (ts, event_id) order wins per
+    * key, keys whose last op is a DELETE vanish from the
+    * materialization (the Debezium/lakehouse merge semantic). One
+    * definition for the table and the stream: per key, max over the
+    * (ts, event_id)-ordered change struct (op and value ride along,
+    * so there is no accumulation and no float seam), plus the op
+    * count. event_id is unique, so the max is the single row a
+    * row_number over (ts DESC, event_id DESC) would pick. Tombstoned
+    * keys filter out AFTER the aggregate, so a delete arriving mid-
     * stream still retracts earlier upserts in complete-mode output.
     * State per key is one struct + one counter, O(keys) total —
-    * watermark-free because CDC state is, by definition, forever
-    * (a key can be updated arbitrarily late). */
-  def streamingCdcApply(events: DataFrame): DataFrame =
+    * watermark-free because CDC state is, by definition, forever (a
+    * key can be updated arbitrarily late). */
+  def cdcApply(events: DataFrame): DataFrame =
     cdcOps(events)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ops"),
@@ -857,10 +844,10 @@ object Streaming {
     // the streaming face (streamingGapFill) is parity-tested
     "stream_gapfill" -> ((s, dir) =>
       graft.operators.Etl.gapFill(Tables.load(s, dir, "events"))),
-    // last-writer-wins changelog materialization; the streaming
-    // aggregation face is parity-tested
+    // last-writer-wins changelog materialization; the same aggregate
+    // runs on the stream (parity-tested)
     "stream_cdc_apply" -> ((s, dir) =>
-      batchCdcApply(Tables.load(s, dir, "events"))))
+      cdcApply(Tables.load(s, dir, "events")).orderBy(col("user_id"))))
 
   def oracleSql: Map[String, String] = Map(
     // identical statement to etl_gapfill — the streaming key gates the

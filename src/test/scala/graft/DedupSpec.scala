@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.sources.Stores
 
 class DedupSpec extends GraftSpec {
   import spark.implicits._
@@ -163,9 +164,10 @@ class DedupSpec extends GraftSpec {
       "fixture must cross a geometry rung to prove anything")
     val path = java.nio.file.Files
       .createTempDirectory("lsh_store_spec").toString + "/store"
-    Dedup.buildLshStore(history, path, ceiling)
+    Stores.ensure(path)(tmp => Dedup.buildLshStore(history, tmp, ceiling))
     // sidecar carries the ceiling-derived geometry, not the live one
-    val geo = spark.read.parquet(s"$path/geometry").collect()(0)
+    val geo = Stores.geometry(spark, Stores.Lsh, path,
+      "bands INT, rows_per_band INT, hist_count BIGINT")
     assert(geo.getAs[Int]("bands") == pinned.bands &&
       geo.getAs[Int]("rows_per_band") == pinned.rowsPerBand)
     assert(geo.getAs[Long]("hist_count") == 2L)
@@ -203,7 +205,8 @@ class DedupSpec extends GraftSpec {
       .createTempDirectory("lsh_store_refuse").toString
     // live (2 + 1) > ceiling (2): the probe must refuse, not degrade
     val p1 = s"$dir/tight"
-    Dedup.buildLshStore(history, p1, corpusCeiling = 2L)
+    Stores.ensure(p1)(tmp =>
+      Dedup.buildLshStore(history, tmp, corpusCeiling = 2L))
     val e1 = intercept[IllegalArgumentException] {
       Dedup.incrementalNearServe(history, batch, p1).collect()
     }
@@ -218,11 +221,11 @@ class DedupSpec extends GraftSpec {
     // a sidecar whose geometry disagrees with its recorded ceiling is
     // a corrupt/foreign store — refused before any probe work
     val p3 = s"$dir/corrupt"
-    Dedup.buildLshStore(history, p3, corpusCeiling = 100L)
-    import spark.implicits._
-    Seq((999, 7, 100L, 2L))
-      .toDF("bands", "rows_per_band", "corpus_ceiling", "hist_count")
-      .write.mode("overwrite").parquet(s"$p3/geometry")
+    Stores.ensure(p3)(tmp =>
+      Dedup.buildLshStore(history, tmp, corpusCeiling = 100L))
+    Stores.writeGeometry(spark, p3,
+      "bands INT, rows_per_band INT, corpus_ceiling BIGINT, hist_count BIGINT",
+      999, 7, 100L, 2L)
     val e3 = intercept[IllegalArgumentException] {
       Dedup.incrementalNearServe(history, batch, p3).collect()
     }
@@ -246,7 +249,8 @@ class DedupSpec extends GraftSpec {
       3L -> "completely novel text that matches nothing in the store")
     val path = java.nio.file.Files
       .createTempDirectory("lsh_store_drift").toString + "/store"
-    Dedup.buildLshStore(builtHistory, path, corpusCeiling = 100L)
+    Stores.ensure(path)(tmp =>
+      Dedup.buildLshStore(builtHistory, tmp, corpusCeiling = 100L))
     val e = intercept[IllegalArgumentException] {
       Dedup.incrementalNearServe(grownHistory, batch, path).collect()
     }

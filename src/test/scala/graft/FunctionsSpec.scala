@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Stores
+
 class FunctionsSpec extends GraftSpec {
   import spark.implicits._
 
@@ -329,10 +331,11 @@ class FunctionsSpec extends GraftSpec {
       "fixture must cross a ladder rung to prove anything")
     val path = java.nio.file.Files
       .createTempDirectory("phash_store_spec").toString + "/store"
-    Multimodal.buildPhashStore(
+    Stores.ensure(path)(tmp => Multimodal.buildPhashStore(
       history.map { case (id, g) => (id, storeBmp8(g)) }
-        .toDF("doc_id", "blob"), path, ceiling)
-    val geo = spark.read.parquet(s"$path/geometry").collect()(0)
+        .toDF("doc_id", "blob"), tmp, ceiling))
+    val geo = Stores.geometry(spark, Stores.Phash, path,
+      "chunks INT, max_dist INT, hist_count BIGINT")
     assert(geo.getAs[Int]("chunks") == pinned &&
       geo.getAs[Int]("max_dist") == 3 &&
       geo.getAs[Long]("hist_count") == 3L)
@@ -377,7 +380,8 @@ class FunctionsSpec extends GraftSpec {
       .createTempDirectory("phash_store_refuse").toString
     // live (3 + 3) > ceiling (3): the probe must refuse, not degrade
     val p1 = s"$dir/tight"
-    Multimodal.buildPhashStore(history, p1, corpusCeiling = 3L)
+    Stores.ensure(p1)(tmp =>
+      Multimodal.buildPhashStore(history, tmp, corpusCeiling = 3L))
     val e1 = intercept[IllegalArgumentException] {
       Multimodal.phashServe(batch, p1).collect()
     }
@@ -392,11 +396,11 @@ class FunctionsSpec extends GraftSpec {
     // a sidecar whose chunk count disagrees with its recorded ceiling
     // is a corrupt/foreign store — refused before any probe work
     val p3 = s"$dir/corrupt"
-    Multimodal.buildPhashStore(history, p3, corpusCeiling = 100L)
-    import spark.implicits._
-    Seq((9, 3, 100L, 3L))
-      .toDF("chunks", "max_dist", "corpus_ceiling", "hist_count")
-      .write.mode("overwrite").parquet(s"$p3/geometry")
+    Stores.ensure(p3)(tmp =>
+      Multimodal.buildPhashStore(history, tmp, corpusCeiling = 100L))
+    Stores.writeGeometry(spark, p3,
+      "chunks INT, max_dist INT, corpus_ceiling BIGINT, hist_count BIGINT",
+      9, 3, 100L, 3L)
     val e3 = intercept[IllegalArgumentException] {
       Multimodal.phashServe(batch, p3).collect()
     }

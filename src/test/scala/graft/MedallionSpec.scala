@@ -95,8 +95,10 @@ class MedallionSpec extends GraftSpec {
       "FileSystem") {
     // a local-only file API on a layer's data path breaks every
     // non-local URI (hdfs://, s3a://, gs://) and bypasses Hadoop's
-    // checksums
-    Seq("sources/Sinks.scala", "pipeline/Medallion.scala").foreach { f =>
+    // checksums; the scratch stores publish under the same rule
+    Seq("sources/Sinks.scala", "pipeline/Medallion.scala",
+        "sources/Stores.scala", "operators/Similarity.scala",
+        "operators/Dedup.scala", "operators/Multimodal.scala").foreach { f =>
       val src = new String(Files.readAllBytes(
         Paths.get("src/main/scala/graft", f)), StandardCharsets.UTF_8)
       Seq("java.io.File", "java.nio.file").foreach { api =>

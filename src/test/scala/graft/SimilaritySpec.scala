@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
-import graft.sources.Tables
+import graft.sources.{Stores, Tables}
 
 class SimilaritySpec extends GraftSpec {
 
@@ -542,10 +542,10 @@ class SimilaritySpec extends GraftSpec {
   }
 
   test("index builds run a bounded number of Spark jobs") {
-    val root = Similarity.indexRoot + "/spec_jobs"
-    val (_, pqJobs) = jobsDuring(Similarity.buildPqIndex(vecs, s"$root/pq"))
-    val (_, ivfJobs) = jobsDuring(
-      Similarity.buildIvfPqIndex(vecs, s"$root/ivfpq"))
+    val (_, pqJobs) = jobsDuring(Similarity.buildPqIndex(vecs,
+      Stores.path(Stores.Ann, "spec_jobs", "pq")))
+    val (_, ivfJobs) = jobsDuring(Similarity.buildIvfPqIndex(vecs,
+      Stores.path(Stores.Ann, "spec_jobs", "ivfpq")))
     // count, sample, seed, one Lloyd pass, then the writes
     assert(pqJobs <= 10, s"PQ build ran $pqJobs jobs")
     assert(ivfJobs <= 16, s"IVF-PQ build ran $ivfJobs jobs")
@@ -669,7 +669,7 @@ class SimilaritySpec extends GraftSpec {
     val ivfPath = Similarity.ivfPqIndexPath(sf)
     // a markerless corpse (killed build) must be replaced, not served
     val corpse = Paths.get(pqPath)
-    if (!Files.exists(corpse.resolve("_GRAFT_INDEX_OK"))) {
+    if (!Files.exists(corpse.resolve(Stores.Marker))) {
       Files.createDirectories(corpse)
     }
     val pqServe = Similarity.knnPqServe(vecs, col("vec_id") < 10, pqPath)
@@ -685,7 +685,7 @@ class SimilaritySpec extends GraftSpec {
     assert(ivfServe.toSeq == ivfBuild.toSeq,
       "knnIvfPqServe diverged from the build face on the same geometry")
     // second call serves the EXISTING index — the marker's mtime pins it
-    val marker = Paths.get(pqPath, "_GRAFT_INDEX_OK")
+    val marker = Paths.get(pqPath, Stores.Marker)
     val mtime = Files.getLastModifiedTime(marker)
     val again = Similarity.knnPqServe(vecs, col("vec_id") < 10, pqPath)
       .collect()
@@ -745,7 +745,9 @@ class SimilaritySpec extends GraftSpec {
     // (the MedallionSpec orphan-location pattern)
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val refRoot = Paths.get(Similarity.indexRoot, "spec_refusals")
+    val pqSub = Stores.path(Stores.Ann, "spec_refusals", "pq_subset")
+    val ivfSub = Stores.path(Stores.Ann, "spec_refusals", "ivf_subset")
+    val refRoot = Paths.get(pqSub).getParent
     if (Files.exists(refRoot)) {
       Files.walk(refRoot).iterator().asScala.toSeq.reverse
         .foreach(Files.deleteIfExists(_))
@@ -754,16 +756,14 @@ class SimilaritySpec extends GraftSpec {
     // serving the full corpus would silently miss every post-build
     // vector (they have no code rows)
     val subset = vecs.filter(col("vec_id") % 2 === 0)
-    val pqSub = Similarity.indexRoot + "/spec_refusals/pq_subset"
-    Similarity.ensureIndex(pqSub)(tmp =>
+    Stores.ensure(pqSub)(tmp =>
       Similarity.buildPqIndex(subset, tmp))
     val drift = intercept[IllegalArgumentException] {
       Similarity.knnPqServe(vecs, col("vec_id") < 10, pqSub)
     }
     assert(drift.getMessage.contains("drifted corpus"))
     // ... and the IVF-PQ face applies the same refusal
-    val ivfSub = Similarity.indexRoot + "/spec_refusals/ivf_subset"
-    Similarity.ensureIndex(ivfSub)(tmp =>
+    Stores.ensure(ivfSub)(tmp =>
       Similarity.buildIvfPqIndex(subset, tmp))
     val ivfDrift = intercept[IllegalArgumentException] {
       Similarity.knnIvfPqServe(vecs, col("vec_id") < 10, ivfSub)

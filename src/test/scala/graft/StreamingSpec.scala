@@ -469,7 +469,7 @@ class StreamingSpec extends GraftSpec {
     // complete-mode aggregation: the recoverable sink is foreachBatch
     // overwriting the materialization (the file sink is append-only)
     def run() = {
-      val q = Streaming.streamingCdcApply(stream()).writeStream
+      val q = Streaming.cdcApply(stream()).writeStream
         .outputMode("complete")
         .foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -488,7 +488,7 @@ class StreamingSpec extends GraftSpec {
     val got = spark.read.parquet(s"$root/state").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
         r.getDouble(3))).toSet
-    val want = Streaming.batchCdcApply(events).collect()
+    val want = Streaming.cdcApply(events).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
         r.getDouble(3))).toSet
     assert(partial > 0, "lifetime 1 materialized nothing")
@@ -651,32 +651,38 @@ class StreamingSpec extends GraftSpec {
   test("streaming CDC apply: last-writer-wins state equals the batch " +
       "materialization, tombstones retract") {
     val stream = Streaming.eventsStream(spark, sf)
-    val q = Streaming.streamingCdcApply(stream).writeStream
+    val q = Streaming.cdcApply(stream).writeStream
       .format("memory").queryName("cdc_out")
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
-    val got = spark.table("cdc_out").collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
         r.getDouble(3))).toSet
-    val want = Streaming.batchCdcApply(Tables.load(spark, sf, "events"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
-        r.getDouble(3))).toSet
-    assert(got == want)
+    val got = rows(spark.table("cdc_out"))
+    val table = rows(Streaming.cdcApply(Tables.load(spark, sf, "events")))
+    // driver-side truth: per key, the op count and the last op in
+    // (ts, event_id) order, on the FULL timestamp resolution (micros,
+    // not getTime's milliseconds) so a sub-millisecond fixture cannot
+    // diverge the expectation
+    val byKey = Streaming.cdcOps(Tables.load(spark, sf, "events"))
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1),
+        r.getLong(2), r.getString(3), r.get(4)))
+      .groupBy(_._1).view
+      .mapValues(os => (os.length.toLong, os.maxBy(x =>
+        (x._2.getTime / 1000 * 1000000 + x._2.getNanos / 1000, x._3))))
+      .toMap
+    val lastOps = byKey.view.mapValues(_._2._4).toMap
+    val truth = byKey.collect { case (k, (n, last)) if last._4 == "U" =>
+      (k, n, last._2, last._5.asInstanceOf[Double])
+    }.toSet
+    assert(got == truth, s"stream: ${(got -- truth).take(3)} vs " +
+      s"${(truth -- got).take(3)}")
+    assert(table == truth, s"table: ${(table -- truth).take(3)} vs " +
+      s"${(truth -- table).take(3)}")
     // tombstones really retract: users whose LAST op is a delete are
     // absent from the materialization but present in the raw stream
-    val lastOps = Streaming.cdcOps(Tables.load(spark, sf, "events"))
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-        r.getLong(2), r.getString(3)))
-      .groupBy(_._1).view
-      // order on the FULL timestamp resolution (micros), not getTime's
-      // milliseconds — batchCdcApply orders by the complete ts, and a
-      // future sub-millisecond fixture must not diverge the expectation
-      .mapValues(_.maxBy(x =>
-        (x._2.getTime / 1000 * 1000000 + x._2.getNanos / 1000,
-          x._3))._4).toMap
     val deleted = lastOps.filter(_._2 == "D").keySet
     assert(deleted.nonEmpty, "fixture has no trailing tombstones")
     val gotKeys = got.map(_._1)
